@@ -18,9 +18,10 @@ Hash family is agg_count_min_portable's (queries/aggregates.py): a
 (a*h + b) mod p mod w maps with LCG-derived literal coefficients —
 identical in both engines, no engine-private binary.
 
-Store protocol: partial_store (append-only files + durable markers;
-replays no-op; compaction supersedes bounded batches only after its
-marker is durable). Per-batch state is <= d*w = 256 counter rows.
+Store protocol: partial_store (per batch, one fsynced file from one
+Arrow collect, published before its durable marker; replays no-op;
+compaction supersedes bounded batches after its marker is durable).
+Per-batch state is <= d*w = 256 counter rows.
 
 Wire-up: ``parsed.writeStream.foreachBatch(lambda b, i:
 cms_apply_batch(b, i, store_dir, "user_id")).option(
@@ -41,6 +42,7 @@ from parquet_exporter_spark.streaming.partial_store import (
     commit_compaction,
     commit_partial,
     committed_batches,
+    live_upto,
     read_partials,
 )
 
@@ -134,13 +136,8 @@ def merge_cms(counters: DataFrame) -> DataFrame:
 def compact_cms_store(spark, store_dir: str, upto_batch: int) -> bool:
     """Fold partials with batch_id <= bound into one. Lossless
     (associative counter add), pinned in tests."""
-    live = read_partials(spark, store_dir)
-    if live is None:
-        return False
-    old = live.filter(F.col("batch_id") <= upto_batch)
-    if old.limit(1).count() == 0:
-        return False
-    return commit_compaction(merge_cms(old), upto_batch, store_dir)
+    old = live_upto(spark, store_dir, upto_batch)
+    return old is not None and commit_compaction(merge_cms(old), upto_batch, store_dir)
 
 
 def serve_cms_estimates(spark, counters: DataFrame, probe_keys: list) -> DataFrame:

@@ -19,9 +19,9 @@ integer arithmetic only, no libm in any decision, one map-side-
 combinable aggregate per batch. Per-batch state is O(octaves * 8)
 counter rows; the store compacts losslessly.
 
-Store protocol: partial_store (append-only files + durable markers;
-replays no-op; compaction supersedes bounded batches only after its
-marker is durable).
+Store protocol: partial_store (per batch, one fsynced file from one
+Arrow collect, published before its durable marker; replays no-op;
+compaction supersedes bounded batches after its marker is durable).
 
 Wire-up: ``parsed.writeStream.foreachBatch(lambda b, i:
 hdr_apply_batch(b, i, store_dir)).option("checkpointLocation", ...)``.
@@ -40,6 +40,7 @@ from parquet_exporter_spark.streaming.partial_store import (
     commit_compaction,
     commit_partial,
     committed_batches,
+    live_upto,
     read_partials,
 )
 
@@ -124,13 +125,8 @@ def compact_hdr_store(spark, store_dir: str, upto_batch: int) -> bool:
     """Fold partials with batch_id <= bound into one. Lossless: the
     compacted store's merged histogram is IDENTICAL (associative
     counter add), pinned in tests."""
-    live = read_partials(spark, store_dir)
-    if live is None:
-        return False
-    old = live.filter(F.col("batch_id") <= upto_batch)
-    if old.limit(1).count() == 0:
-        return False
-    return commit_compaction(merge_hdr(old), upto_batch, store_dir)
+    old = live_upto(spark, store_dir, upto_batch)
+    return old is not None and commit_compaction(merge_hdr(old), upto_batch, store_dir)
 
 
 def serve_hdr_quantiles(spark, buckets: DataFrame, probes: list[float]) -> DataFrame:

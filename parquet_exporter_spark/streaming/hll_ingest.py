@@ -19,10 +19,11 @@ rendering — exact integers, no libm in any decision); the estimator
 keeps the indicator sum exact by integer scaling (s_scaled = sum
 2^(52-rho) + V*2^52) and applies the published linear-counting branch.
 
-Store protocol: partial_store (append-only files + durable markers;
-replays no-op; compaction supersedes bounded batches only after its
-marker is durable). Per-batch state is <= m = 512 register rows; the
-store holds O(k * 512) rows over k batches and compacts to 512.
+Store protocol: partial_store (per batch, one fsynced file from one
+Arrow collect, published before its durable marker; replays no-op;
+compaction supersedes bounded batches after its marker is durable).
+Per-batch state is <= m = 512 register rows; the store holds
+O(k * 512) rows over k batches and compacts to 512.
 
 Wire-up: ``parsed.writeStream.foreachBatch(lambda b, i:
 hll_apply_batch(b, i, store_dir, "user_id")).option(
@@ -42,6 +43,7 @@ from parquet_exporter_spark.streaming.partial_store import (
     commit_compaction,
     commit_partial,
     committed_batches,
+    live_upto,
     read_partials,
 )
 
@@ -132,13 +134,8 @@ def compact_hll_store(spark, store_dir: str, upto_batch: int) -> bool:
     Because max is associative and idempotent, the compacted store
     serves the IDENTICAL registers (and therefore the identical
     estimate) as the uncompacted one — pinned in tests."""
-    live = read_partials(spark, store_dir)
-    if live is None:
-        return False
-    old = live.filter(F.col("batch_id") <= upto_batch)
-    if old.limit(1).count() == 0:
-        return False
-    return commit_compaction(merge_hll(old), upto_batch, store_dir)
+    old = live_upto(spark, store_dir, upto_batch)
+    return old is not None and commit_compaction(merge_hll(old), upto_batch, store_dir)
 
 
 def serve_hll_estimate(spark, regs: DataFrame) -> DataFrame:

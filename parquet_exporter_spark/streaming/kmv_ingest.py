@@ -16,9 +16,10 @@ Hashes are the portable 60-bit md5-prefix family (exact in BIGINT on
 both engines); the per-batch bottom-k is TakeOrderedAndProject —
 per-partition top-k, no global sort (the agg_kmv_distinct shape).
 
-Store protocol: partial_store (append-only files + durable markers;
-replays no-op; compaction supersedes bounded batches only after its
-marker is durable). Per-batch state is <= k = 128 hash rows.
+Store protocol: partial_store (per batch, one fsynced file from one
+Arrow collect, published before its durable marker; replays no-op;
+compaction supersedes bounded batches after its marker is durable).
+Per-batch state is <= k = 128 hash rows.
 
 Wire-up: ``parsed.writeStream.foreachBatch(lambda b, i:
 kmv_apply_batch(b, i, store_dir, "user_id")).option(
@@ -38,6 +39,7 @@ from parquet_exporter_spark.streaming.partial_store import (
     commit_compaction,
     commit_partial,
     committed_batches,
+    live_upto,
     read_partials,
 )
 
@@ -118,13 +120,8 @@ def merge_kmv(hashes: DataFrame) -> DataFrame:
 def compact_kmv_store(spark, store_dir: str, upto_batch: int) -> bool:
     """Fold partials with batch_id <= bound into one k-row partial.
     Lossless (bottom-k invariant), pinned in tests."""
-    live = read_partials(spark, store_dir)
-    if live is None:
-        return False
-    old = live.filter(F.col("batch_id") <= upto_batch)
-    if old.limit(1).count() == 0:
-        return False
-    return commit_compaction(merge_kmv(old), upto_batch, store_dir)
+    old = live_upto(spark, store_dir, upto_batch)
+    return old is not None and commit_compaction(merge_kmv(old), upto_batch, store_dir)
 
 
 def serve_kmv_estimate(spark, hashes: DataFrame) -> DataFrame:

@@ -11,14 +11,10 @@ Per micro-batch:
   construction of agg_tdigest_sketch, queries/aggregates.py: rank ->
   tail distance -> bit-length level -> 4-way sub-split; exact integer
   arithmetic throughout) — O(log batch) centroid rows.
-- ``tdigest_apply_batch`` commits the centroids APPEND-ONLY under a
-  batch-scoped name plus a durable marker. Partials are immutable, so
-  exactly-once is simpler than the SCD2 generational protocol: a replay
-  of a committed batch is a marker-checked no-op, a crash before the
-  marker leaves an orphan file no reader resolves (readers glob only
-  batches with committed markers), and the replay overwrites it with
-  identical content (the partial is a deterministic function of the
-  batch).
+- ``tdigest_apply_batch`` commits the centroids APPEND-ONLY through
+  the partial_store protocol: one file published from one Arrow
+  collect, fsynced before its durable marker. A replay of a committed
+  batch is a no-op and an uncommitted orphan is never read.
 - ``serve_tdigest_quantiles`` merges ALL committed partials without
   touching data rows — the agg_tdigest_merged re-bin: centroids sorted
   by value bounds, cumulative weight assigns each centroid's midpoint
@@ -58,6 +54,7 @@ from parquet_exporter_spark.streaming.partial_store import (
     commit_compaction,
     commit_partial,
     committed_batches,
+    live_upto,
     read_partials,
 )
 
@@ -163,11 +160,8 @@ def compact_tdigest_store(spark, store_dir: str, upto_batch: int) -> bool:
     accuracy-preserving (see module docstring), so after compaction the
     store serves the same n and value bounds and every quantile stays
     inside the t-digest rank-error bound."""
-    live = read_partials(spark, store_dir)
-    if live is None:
-        return False
-    old = live.filter(F.col("batch_id") <= upto_batch)
-    if old.limit(1).count() == 0:
+    old = live_upto(spark, store_dir, upto_batch)
+    if old is None:
         return False
     folded = merge_tdigest(old).select(
         F.col("side2").alias("side"),
