@@ -9,6 +9,8 @@ prices), ROUND_RATIO for small ones (averaged discounts, correlations).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -22,3 +24,12 @@ def rmoney(c: Column) -> Column:
 
 def rratio(c: Column) -> Column:
     return F.round(c, ROUND_RATIO)
+
+
+def source_version(files: list[str]) -> str:
+    """The freshness key of a scratch store built from ``files``: each
+    file's path, sub-second mtime and size. Data regenerated within the
+    same second as the previous generation still gets a new key."""
+    return "|".join(
+        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
+    )

@@ -10,6 +10,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_exporter_spark.queries._util import source_version
 from parquet_exporter_spark.registry import query
 from parquet_exporter_spark.tables import read_table, tiny_df
 
@@ -854,9 +855,7 @@ def _bloom_scratch_dir() -> str:
     import tempfile
 
     src_files = sorted(_glob.glob(os.path.join(HIGHCARD_SESSIONS, "*.parquet")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src_files
-    ) or HIGHCARD_SESSIONS
+    version = source_version(src_files) or HIGHCARD_SESSIONS
     tag = _hashlib.sha256(version.encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"pes_bloomidx_{tag}")
 
@@ -920,9 +919,7 @@ def _bloom_int_scratch_dir() -> str:
     import tempfile
 
     src_files = sorted(_glob.glob(os.path.join(HIGHCARD_SESSIONS, "*.parquet")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src_files
-    ) or HIGHCARD_SESSIONS
+    version = source_version(src_files) or HIGHCARD_SESSIONS
     tag = _hashlib.sha256(("int:" + version).encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"pes_bloomint_{tag}")
 
@@ -1180,9 +1177,7 @@ def _timetravel_scratch_dir(sf_dir: str) -> str:
     import tempfile
 
     src = sorted(_glob.glob(os.path.join(sf_dir, "orders*")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src
-    ) or sf_dir
+    version = source_version(src) or sf_dir
     tag = _hashlib.sha256(("ttravel:" + version).encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"pes_ttravel_{tag}")
 
@@ -1311,9 +1306,7 @@ def _optimize_scratch_dir(sf_dir: str) -> str:
     import tempfile
 
     src = sorted(_glob.glob(os.path.join(sf_dir, "orders*")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src
-    ) or sf_dir
+    version = source_version(src) or sf_dir
     tag = _hashlib.sha256(("optcompact:" + version).encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"pes_optcompact_{tag}")
 
@@ -1524,9 +1517,7 @@ def _zonemap_scratch_dir(sf_dir: str) -> str:
 
     src = os.path.join(sf_dir, "events.parquet")
     files = sorted(_glob.glob(src)) or [src]
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
-    )
+    version = source_version(files)
     tag = _hashlib.sha256(("zonemap:" + version).encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"pes_zonemap_{tag}")
 
@@ -1603,9 +1594,7 @@ def _zonemap_dist_scratch_dir() -> str:
     import tempfile
 
     src_files = sorted(_glob.glob(os.path.join(RANGED_EVENTS, "*.parquet")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src_files
-    ) or RANGED_EVENTS
+    version = source_version(src_files) or RANGED_EVENTS
     tag = _hashlib.sha256(("zmdist:" + version).encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"pes_zmdist_{tag}")
 

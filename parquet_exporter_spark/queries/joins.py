@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.operators.asof import asof_join, asof_join_nearest
-from parquet_exporter_spark.queries._util import rmoney
+from parquet_exporter_spark.queries._util import rmoney, source_version
 from parquet_exporter_spark.registry import query
 from parquet_exporter_spark.tables import read_table, tiny_df
 
@@ -672,12 +672,8 @@ def _bucketed_table(spark: SparkSession, sf_dir: str, name: str, key: str, n_buc
     import os
     import tempfile
 
-    # Sub-second mtime plus size: data regenerated within the same second
-    # as the previous generation must still produce a fresh tag.
     src_files = sorted(glob.glob(os.path.join(sf_dir, name + "*")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src_files
-    ) or sf_dir
+    version = source_version(src_files) or sf_dir
     tag = hashlib.sha256(f"{sf_dir}|{version}".encode()).hexdigest()[:12]
     tbl = f"pes_bkt_{name}_{tag}"
     path = os.path.join(tempfile.gettempdir(), tbl)

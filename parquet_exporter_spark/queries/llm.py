@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from parquet_exporter_spark.functions import dedup as D
 from parquet_exporter_spark.functions import similarity as S
 from parquet_exporter_spark.functions import text as T
+from parquet_exporter_spark.queries._util import source_version
 from parquet_exporter_spark.registry import query
 from parquet_exporter_spark import tables
 from parquet_exporter_spark.tables import read_table, tiny_df
@@ -378,9 +379,7 @@ def _ivf_scratch_path(sf_dir: str) -> str:
     import tempfile
 
     src = sorted(glob.glob(os.path.join(sf_dir, "embeddings*")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src
-    ) or sf_dir
+    version = source_version(src) or sf_dir
     tag = hashlib.sha256(f"{sf_dir}|{version}".encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"pes_ivf_inc_{tag}")
 
@@ -1216,9 +1215,7 @@ def _incremental_index_path(sf_dir: str) -> str:
     import tempfile
 
     src = sorted(glob.glob(os.path.join(sf_dir, "documents*")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src
-    ) or sf_dir
+    version = source_version(src) or sf_dir
     tag = hashlib.sha256(f"{sf_dir}|{version}".encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"pes_mh_index_{tag}")
 

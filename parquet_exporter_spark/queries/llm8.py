@@ -25,6 +25,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parquet_exporter_spark.queries._util import source_version
 from parquet_exporter_spark.registry import query
 from parquet_exporter_spark.tables import read_table
 
@@ -461,9 +462,7 @@ def _rbq_scratch_path(sf_dir: str) -> str:
     import tempfile
 
     src = sorted(glob.glob(os.path.join(sf_dir, "embeddings*")))
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in src
-    ) or sf_dir
+    version = source_version(src) or sf_dir
     tag = hashlib.sha256(f"{sf_dir}|{version}".encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"pes_rbq_sig_{tag}")
 

@@ -8,12 +8,17 @@ express.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_exporter_spark.queries._util import source_version
 from parquet_exporter_spark.registry import query
+from parquet_exporter_spark.streaming.hll_ingest import HLL_LC_CUT, HLL_NUM
 from parquet_exporter_spark.tables import read_table, tiny_df
 
 
@@ -1311,22 +1316,18 @@ def cdc_scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the driver hash-checks the streaming implementation itself, not a
 # re-expression of it.
 
+# micro-batches (l_orderkey or o_orderkey % 3) of every sketch twin
+_SKETCH_PARTS = 3
 _STD_PROBES = (0.01, 0.25, 0.5, 0.9, 0.99)
-_STD_PARTS = 3
 
 
-def _tdigest_stream_scratch(sf_dir: str) -> str:
-    import glob as _glob
-    import hashlib as _hl
-    import tempfile
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    files = sorted(_glob.glob(src)) or [src]
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
-    )
-    tag = _hl.sha256(("stdigest:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_stdigest_{tag}")
+def _stream_scratch(sf_dir: str, table: str, tag: str) -> str:
+    """The versioned scratch store of a sketch twin: ``pes_<tag>_<hash>``
+    in the temp dir, keyed on the source table's files."""
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    version = source_version(sorted(glob.glob(src)) or [src])
+    digest = hashlib.sha256(f"{tag}:{version}".encode()).hexdigest()[:12]
+    return os.path.join(tempfile.gettempdir(), f"pes_{tag}_{digest}")
 
 
 def _td_part_centroids_sql(parts: int) -> str:
@@ -1371,7 +1372,7 @@ def _td_part_centroids_sql(parts: int) -> str:
 @query(
     "stream_tdigest_twin",
     oracle=f"""
-    WITH {_td_part_centroids_sql(_STD_PARTS)},
+    WITH {_td_part_centroids_sql(_SKETCH_PARTS)},
     ordered AS (
         SELECT *,
                CAST(coalesce(sum(w) OVER (
@@ -1434,7 +1435,7 @@ def _td_part_centroids_sql(parts: int) -> str:
                     AS BIGINT) AS le
         FROM served s CROSS JOIN gr g GROUP BY s.p)
     SELECT s.p, s.t AS target_rank, s.weight AS merged_weight, s.n_inputs,
-           CAST({_STD_PARTS} AS BIGINT) AS n_batches,
+           CAST({_SKETCH_PARTS} AS BIGINT) AS n_batches,
            round(s.est_cents / 100.0, 4) AS est_price,
            round(x.exact_cents / 100.0, 4) AS exact_price,
            CAST(CASE WHEN r.lt > s.t THEN r.lt - s.t
@@ -1452,8 +1453,8 @@ def _td_part_centroids_sql(parts: int) -> str:
     doc=(
         "Batch twin of STREAMING t-digest maintenance — and unlike most "
         "twins it EXECUTES the streaming code: lineitem is split into "
-        f"{_STD_PARTS} deterministic micro-batches (l_orderkey % "
-        f"{_STD_PARTS}, the stand-in for file-replay triggers), each "
+        f"{_SKETCH_PARTS} deterministic micro-batches (l_orderkey % "
+        f"{_SKETCH_PARTS}, the stand-in for file-replay triggers), each "
         "committed through the real foreachBatch handler "
         "(streaming/tdigest_ingest.tdigest_apply_batch — append-only "
         "immutable partials, durable markers, replayed batches no-op) "
@@ -1477,37 +1478,25 @@ def _td_part_centroids_sql(parts: int) -> str:
 def stream_tdigest_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from parquet_exporter_spark.streaming.partial_store import (
-        commit_partials_batched,
-    )
     from parquet_exporter_spark.streaming.tdigest_ingest import (
-        committed_batches,
-        read_tdigest_centroids,
+        TDIGEST,
         serve_tdigest_quantiles,
-        tdigest_partial,
     )
 
-    store = _tdigest_stream_scratch(sf_dir)
+    store = _stream_scratch(sf_dir, "lineitem", "stdigest")
     li = read_table(spark, sf_dir, "lineitem")
     cents = li.select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.col("l_orderkey") % _STD_PARTS).alias("batch"),
+        (F.col("l_orderkey") % _SKETCH_PARTS).alias("batch"),
     )
-    if len(committed_batches(store)) < _STD_PARTS:
-        # Optimization r15 (VERDICT item 4): ONE-JOB batched bootstrap of
-        # every still-missing partial — the per-batch rank windows run
-        # partitioned by batch in a single pass — instead of one
-        # sequential job (scan + single-partition window + write) per
-        # micro-batch. Same partial rows, same marker protocol; the
-        # foreachBatch handler (tdigest_apply_batch) remains the real
-        # streaming path.
-        commit_partials_batched(
-            tdigest_partial(cents, "cents", batch_col="batch"),
-            list(range(_STD_PARTS)),
-            store,
-            "batch",
-        )
-    cent = read_tdigest_centroids(spark, store)
+    # ONE-JOB batched bootstrap of every still-missing partial (none
+    # once the store is complete) — the per-batch rank windows run
+    # partitioned by batch in a single pass — instead of one sequential
+    # job (scan + single-partition window + write) per micro-batch.
+    # Same partial rows, same marker protocol; the foreachBatch handler
+    # (tdigest_apply_batch) remains the real streaming path.
+    TDIGEST.bootstrap(cents, "cents", _SKETCH_PARTS, store)
+    cent = TDIGEST.read(spark, store)
     served = serve_tdigest_quantiles(spark, cent, list(_STD_PROBES))
     wg = Window.orderBy("cents")
     gr = cents.select(
@@ -1549,7 +1538,7 @@ def stream_tdigest_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("t").alias("target_rank"),
             F.col("weight").alias("merged_weight"),
             "n_inputs",
-            F.lit(_STD_PARTS).cast("long").alias("n_batches"),
+            F.lit(_SKETCH_PARTS).cast("long").alias("n_batches"),
             F.round(F.col("est_cents") / 100.0, 4).alias("est_price"),
             F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
             rank_err.alias("rank_err"),
@@ -1559,31 +1548,11 @@ def stream_tdigest_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHLL_PARTS = 3
-_SHLL_ALPHA = 0.7213 / (1.0 + 1.079 / 512)
-_SHLL_NUM = _SHLL_ALPHA * float(512) * float(512) * float(1 << 52)
-_SHLL_LC_CUT = 2.5 * 512
-
-
-def _hll_stream_scratch(sf_dir: str) -> str:
-    import glob as _glob
-    import hashlib as _hl
-    import tempfile
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    files = sorted(_glob.glob(src)) or [src]
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
-    )
-    tag = _hl.sha256(("shll:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_shll_{tag}")
-
-
 @query(
     "stream_hll_twin",
     oracle=f"""
     WITH h AS MATERIALIZED (
-        SELECT l_orderkey % {_SHLL_PARTS} AS batch_id,
+        SELECT l_orderkey % {_SKETCH_PARTS} AS batch_id,
                ('0x' || substring(md5(CAST(l_partkey AS VARCHAR)),
                                   1, 15))::BIGINT AS hv
         FROM lineitem),
@@ -1613,16 +1582,16 @@ def _hll_stream_scratch(sf_dir: str) -> str:
         FROM merged),
     est AS (
         SELECT n_nonempty, v_empty, s_scaled,
-               CAST(CASE WHEN {_SHLL_NUM!r} / CAST(s_scaled AS DOUBLE)
-                              <= {_SHLL_LC_CUT!r} AND v_empty > 0
+               CAST(CASE WHEN {HLL_NUM!r} / CAST(s_scaled AS DOUBLE)
+                              <= {HLL_LC_CUT!r} AND v_empty > 0
                     THEN round(512.0 * ln(512.0 / CAST(v_empty AS DOUBLE)))
-                    ELSE round({_SHLL_NUM!r} / CAST(s_scaled AS DOUBLE))
+                    ELSE round({HLL_NUM!r} / CAST(s_scaled AS DOUBLE))
                     END AS BIGINT) AS est_distinct
         FROM state),
     truth AS (
         SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS true_distinct
         FROM lineitem)
-    SELECT CAST(512 AS BIGINT) AS m, CAST({_SHLL_PARTS} AS BIGINT) AS n_batches,
+    SELECT CAST(512 AS BIGINT) AS m, CAST({_SKETCH_PARTS} AS BIGINT) AS n_batches,
            e.n_nonempty, e.v_empty, e.s_scaled, e.est_distinct,
            t.true_distinct,
            round(abs(CAST(e.est_distinct AS DOUBLE) - t.true_distinct)
@@ -1637,7 +1606,7 @@ def _hll_stream_scratch(sf_dir: str) -> str:
         "Batch twin of STREAMING HyperLogLog maintenance — like "
         "stream_tdigest_twin it EXECUTES the streaming code "
         "(streaming/hll_ingest.py): lineitem's l_partkey stream splits "
-        f"into {_SHLL_PARTS} deterministic micro-batches committed "
+        f"into {_SKETCH_PARTS} deterministic micro-batches committed "
         "through the real foreachBatch handler into a versioned scratch "
         "store (append-only register partials, durable markers), and "
         "the merged global state is served exactly as a distinct-count "
@@ -1658,31 +1627,19 @@ def _hll_stream_scratch(sf_dir: str) -> str:
 )
 def stream_hll_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_exporter_spark.streaming.hll_ingest import (
-        committed_batches,
+        HLL,
         hll_partial,
         merge_hll,
-        read_hll_registers,
         serve_hll_estimate,
     )
-    from parquet_exporter_spark.streaming.partial_store import (
-        commit_partials_batched,
-    )
 
-    store = _hll_stream_scratch(sf_dir)
+    store = _stream_scratch(sf_dir, "lineitem", "shll")
     li = read_table(spark, sf_dir, "lineitem")
     keyed = li.select(
-        "l_partkey", (F.col("l_orderkey") % _SHLL_PARTS).alias("batch")
+        "l_partkey", (F.col("l_orderkey") % _SKETCH_PARTS).alias("batch")
     )
-    if len(committed_batches(store)) < _SHLL_PARTS:
-        # Optimization r15 (VERDICT item 4): one-job batched bootstrap —
-        # see stream_tdigest_twin.
-        commit_partials_batched(
-            hll_partial(keyed, "l_partkey", batch_col="batch"),
-            list(range(_SHLL_PARTS)),
-            store,
-            "batch",
-        )
-    regs = read_hll_registers(spark, store)
+    HLL.bootstrap(keyed, "l_partkey", _SKETCH_PARTS, store)  # see stream_tdigest_twin
+    regs = HLL.read(spark, store)
     served = serve_hll_estimate(spark, regs)
     whole = hll_partial(li.select("l_partkey"), "l_partkey").withColumnRenamed(
         "r", "wr"
@@ -1706,7 +1663,7 @@ def stream_hll_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(law))
         .select(
             "m",
-            F.lit(_SHLL_PARTS).cast("long").alias("n_batches"),
+            F.lit(_SKETCH_PARTS).cast("long").alias("n_batches"),
             "n_nonempty",
             "v_empty",
             "s_scaled",
@@ -1733,22 +1690,7 @@ def stream_hll_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHDR_PARTS = 3
 _SHDR_PROBES = (0.5, 0.99)
-
-
-def _hdr_stream_scratch(sf_dir: str) -> str:
-    import glob as _glob
-    import hashlib as _hl
-    import tempfile
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    files = sorted(_glob.glob(src)) or [src]
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
-    )
-    tag = _hl.sha256(("shdr:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_shdr_{tag}")
 
 
 @query(
@@ -1756,7 +1698,7 @@ def _hdr_stream_scratch(sf_dir: str) -> str:
     oracle=f"""
     WITH ranked AS (
         SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
-               l_orderkey % {_SHDR_PARTS} AS batch_id,
+               l_orderkey % {_SKETCH_PARTS} AS batch_id,
                CAST(row_number() OVER (ORDER BY l_extendedprice) - 1 AS BIGINT)
                    AS r0
         FROM lineitem),
@@ -1810,7 +1752,7 @@ def _hdr_stream_scratch(sf_dir: str) -> str:
         SELECT t.p, CAST(any_value(r.cents) AS BIGINT) AS exact_cents
         FROM targets t JOIN ranked r ON r.r0 = t.t GROUP BY t.p)
     SELECT h.p, h.t AS target_rank, h.c AS bucket_count,
-           CAST({_SHDR_PARTS} AS BIGINT) AS n_batches,
+           CAST({_SKETCH_PARTS} AS BIGINT) AS n_batches,
            round(h.lo / 100.0, 4) AS bucket_lo,
            round(h.hi / 100.0, 4) AS bucket_hi,
            round((h.lo + CASE WHEN h.c > 1
@@ -1829,7 +1771,7 @@ def _hdr_stream_scratch(sf_dir: str) -> str:
         "member of the foreachBatch sketch family, and like its "
         "siblings it EXECUTES the streaming code "
         "(streaming/hdr_ingest.py): lineitem's cents stream splits "
-        f"into {_SHDR_PARTS} deterministic micro-batches committed "
+        f"into {_SKETCH_PARTS} deterministic micro-batches committed "
         "through the real handler into a versioned scratch store, and "
         "p50/p99 are served off the merged histogram exactly as a "
         "latency monitor would serve them mid-stream. HDR's merge law "
@@ -1853,32 +1795,20 @@ def stream_hdr_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from parquet_exporter_spark.streaming.hdr_ingest import (
-        committed_batches,
+        HDR,
         hdr_partial,
         merge_hdr,
-        read_hdr_buckets,
         serve_hdr_quantiles,
     )
-    from parquet_exporter_spark.streaming.partial_store import (
-        commit_partials_batched,
-    )
 
-    store = _hdr_stream_scratch(sf_dir)
+    store = _stream_scratch(sf_dir, "lineitem", "shdr")
     li = read_table(spark, sf_dir, "lineitem")
     cents = li.select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.col("l_orderkey") % _SHDR_PARTS).alias("batch"),
+        (F.col("l_orderkey") % _SKETCH_PARTS).alias("batch"),
     )
-    if len(committed_batches(store)) < _SHDR_PARTS:
-        # Optimization r15 (VERDICT item 4): one-job batched bootstrap —
-        # see stream_tdigest_twin.
-        commit_partials_batched(
-            hdr_partial(cents, "cents", batch_col="batch"),
-            list(range(_SHDR_PARTS)),
-            store,
-            "batch",
-        )
-    buckets = read_hdr_buckets(spark, store)
+    HDR.bootstrap(cents, "cents", _SKETCH_PARTS, store)  # see stream_tdigest_twin
+    buckets = HDR.read(spark, store)
     served = serve_hdr_quantiles(spark, buckets, list(_SHDR_PROBES))
     whole = (
         hdr_partial(cents.select("cents"))
@@ -1919,7 +1849,7 @@ def stream_hdr_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p",
             F.col("t").alias("target_rank"),
             F.col("c").alias("bucket_count"),
-            F.lit(_SHDR_PARTS).cast("long").alias("n_batches"),
+            F.lit(_SKETCH_PARTS).cast("long").alias("n_batches"),
             F.round(F.col("lo") / 100.0, 4).alias("bucket_lo"),
             F.round(F.col("hi") / 100.0, 4).alias("bucket_hi"),
             F.round(F.col("est_cents") / 100.0, 4).alias("est_price"),
@@ -1945,22 +1875,7 @@ def stream_hdr_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # executing its real handler and hash-checking the exact merge law the
 # sketch actually has.
 
-_SCMS_PARTS = 3
 _SCMS_PROBES = (1, 2, 7, 13)
-
-
-def _cms_stream_scratch(sf_dir: str) -> str:
-    import glob as _glob
-    import hashlib as _hl
-    import tempfile
-
-    src = os.path.join(sf_dir, "orders.parquet")
-    files = sorted(_glob.glob(src)) or [src]
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
-    )
-    tag = _hl.sha256(("scms:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_scms_{tag}")
 
 
 def _scms_oracle() -> str:
@@ -1973,7 +1888,7 @@ def _scms_oracle() -> str:
     probes = ", ".join(f"('{k}')" for k in _SCMS_PROBES)
     return f"""
     WITH h AS MATERIALIZED (
-        SELECT o_custkey, o_orderkey % {_SCMS_PARTS} AS batch_id, {bh} AS h
+        SELECT o_custkey, o_orderkey % {_SKETCH_PARTS} AS batch_id, {bh} AS h
         FROM orders),
     buck AS MATERIALIZED (
         SELECT batch_id, seed AS depth,
@@ -2011,7 +1926,7 @@ def _scms_oracle() -> str:
     SELECT e.key, e.est, t.true_cnt,
            CAST(e.est - t.true_cnt AS BIGINT) AS overcount,
            e.est >= t.true_cnt AS guarantee_holds,
-           CAST({_SCMS_PARTS} AS BIGINT) AS n_batches,
+           CAST({_SKETCH_PARTS} AS BIGINT) AS n_batches,
            l.n_cells, l.n_cell_mismatch,
            l.n_cell_mismatch = 0 AS merge_exact
     FROM est e JOIN truth t USING (key) CROSS JOIN law l
@@ -2025,7 +1940,7 @@ def _scms_oracle() -> str:
         "Batch twin of STREAMING count-min-sketch maintenance — the "
         "heavy-hitter monitor member of the foreachBatch family, "
         "executing the real handler (streaming/cms_ingest.py): orders' "
-        f"o_custkey stream splits into {_SCMS_PARTS} deterministic "
+        f"o_custkey stream splits into {_SKETCH_PARTS} deterministic "
         "micro-batches committed as (depth x width) counter partials "
         "into a versioned scratch store. CMS counters add, so the "
         "merge is grouping-invariant like HDR's: the merged table "
@@ -2044,31 +1959,19 @@ def _scms_oracle() -> str:
 )
 def stream_cms_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_exporter_spark.streaming.cms_ingest import (
+        CMS,
         cms_partial,
-        committed_batches,
         merge_cms,
-        read_cms_counters,
         serve_cms_estimates,
     )
-    from parquet_exporter_spark.streaming.partial_store import (
-        commit_partials_batched,
-    )
 
-    store = _cms_stream_scratch(sf_dir)
+    store = _stream_scratch(sf_dir, "orders", "scms")
     orders = read_table(spark, sf_dir, "orders")
     keyed = orders.select(
-        "o_custkey", (F.col("o_orderkey") % _SCMS_PARTS).alias("batch")
+        "o_custkey", (F.col("o_orderkey") % _SKETCH_PARTS).alias("batch")
     )
-    if len(committed_batches(store)) < _SCMS_PARTS:
-        # Optimization r15 (VERDICT item 4): one-job batched bootstrap —
-        # see stream_tdigest_twin.
-        commit_partials_batched(
-            cms_partial(keyed, "o_custkey", batch_col="batch"),
-            list(range(_SCMS_PARTS)),
-            store,
-            "batch",
-        )
-    counters = read_cms_counters(spark, store)
+    CMS.bootstrap(keyed, "o_custkey", _SKETCH_PARTS, store)  # see stream_tdigest_twin
+    counters = CMS.read(spark, store)
     est = serve_cms_estimates(
         spark, counters, [str(k) for k in _SCMS_PROBES]
     )
@@ -2107,7 +2010,7 @@ def stream_cms_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             "true_cnt",
             (F.col("est") - F.col("true_cnt")).cast("long").alias("overcount"),
             (F.col("est") >= F.col("true_cnt")).alias("guarantee_holds"),
-            F.lit(_SCMS_PARTS).cast("long").alias("n_batches"),
+            F.lit(_SKETCH_PARTS).cast("long").alias("n_batches"),
             "n_cells",
             "n_cell_mismatch",
             (F.col("n_cell_mismatch") == 0).alias("merge_exact"),
@@ -2115,28 +2018,11 @@ def stream_cms_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SKMV_PARTS = 3
-
-
-def _kmv_stream_scratch(sf_dir: str) -> str:
-    import glob as _glob
-    import hashlib as _hl
-    import tempfile
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    files = sorted(_glob.glob(src)) or [src]
-    version = "|".join(
-        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
-    )
-    tag = _hl.sha256(("skmv:" + version).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"pes_skmv_{tag}")
-
-
 @query(
     "stream_kmv_twin",
     oracle=f"""
     WITH h AS MATERIALIZED (
-        SELECT DISTINCT l_orderkey % {_SKMV_PARTS} AS batch_id,
+        SELECT DISTINCT l_orderkey % {_SKETCH_PARTS} AS batch_id,
                ('0x' || substring(md5(CAST(l_partkey AS VARCHAR)),
                                   1, 15))::BIGINT AS hv
         FROM lineitem),
@@ -2162,7 +2048,7 @@ def _kmv_stream_scratch(sf_dir: str) -> str:
     truth AS (
         SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS true_distinct
         FROM lineitem)
-    SELECT CAST(128 AS BIGINT) AS k, CAST({_SKMV_PARTS} AS BIGINT) AS n_batches,
+    SELECT CAST(128 AS BIGINT) AS k, CAST({_SKETCH_PARTS} AS BIGINT) AS n_batches,
            m.n_kept, m.kth AS kth_merged, w.kth_whole,
            m.kth IS NOT DISTINCT FROM w.kth_whole AS merge_exact,
            CAST(CASE WHEN m.kth IS NULL THEN m.n_kept
@@ -2187,7 +2073,7 @@ def _kmv_stream_scratch(sf_dir: str) -> str:
         "fifth and last mergeable sketch gains its foreachBatch "
         "maintainer (streaming/kmv_ingest.py), executing the real "
         f"handler: lineitem's l_partkey stream splits into "
-        f"{_SKMV_PARTS} deterministic micro-batches committed as "
+        f"{_SKETCH_PARTS} deterministic micro-batches committed as "
         "bottom-k (k=128) hash partials into a versioned scratch "
         "store. The merge law is agg_kmv_union's bottom-k invariant "
         "run through the store: every hash in the global bottom-k is "
@@ -2205,31 +2091,18 @@ def _kmv_stream_scratch(sf_dir: str) -> str:
 )
 def stream_kmv_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_exporter_spark.streaming.kmv_ingest import (
-        committed_batches,
+        KMV,
         kmv_partial,
-        merge_kmv,
-        read_kmv_hashes,
         serve_kmv_estimate,
     )
-    from parquet_exporter_spark.streaming.partial_store import (
-        commit_partials_batched,
-    )
 
-    store = _kmv_stream_scratch(sf_dir)
+    store = _stream_scratch(sf_dir, "lineitem", "skmv")
     li = read_table(spark, sf_dir, "lineitem")
     keyed = li.select(
-        "l_partkey", (F.col("l_orderkey") % _SKMV_PARTS).alias("batch")
+        "l_partkey", (F.col("l_orderkey") % _SKETCH_PARTS).alias("batch")
     )
-    if len(committed_batches(store)) < _SKMV_PARTS:
-        # Optimization r15 (VERDICT item 4): one-job batched bootstrap —
-        # see stream_tdigest_twin.
-        commit_partials_batched(
-            kmv_partial(keyed, "l_partkey", batch_col="batch"),
-            list(range(_SKMV_PARTS)),
-            store,
-            "batch",
-        )
-    hashes = read_kmv_hashes(spark, store)
+    KMV.bootstrap(keyed, "l_partkey", _SKETCH_PARTS, store)  # see stream_tdigest_twin
+    hashes = KMV.read(spark, store)
     served = serve_kmv_estimate(spark, hashes)
     # whole-stream bottom-k, built single-pass for the law check
     from pyspark.sql import Window
@@ -2250,7 +2123,7 @@ def stream_kmv_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(truth))
         .select(
             "k",
-            F.lit(_SKMV_PARTS).cast("long").alias("n_batches"),
+            F.lit(_SKETCH_PARTS).cast("long").alias("n_batches"),
             "n_kept",
             F.col("kth").alias("kth_merged"),
             "kth_whole",

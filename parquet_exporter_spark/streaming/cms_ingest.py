@@ -18,10 +18,9 @@ Hash family is agg_count_min_portable's (queries/aggregates.py): a
 (a*h + b) mod p mod w maps with LCG-derived literal coefficients —
 identical in both engines, no engine-private binary.
 
-Store protocol: partial_store (per batch, one fsynced file from one
-Arrow collect, published before its durable marker; replays no-op;
-compaction supersedes bounded batches after its marker is durable).
-Per-batch state is <= d*w = 256 counter rows.
+Store protocol: ``partial_store.MergeableSketch`` (the ``CMS`` spec
+below: partial ``cms_partial``, fold ``merge_cms``). Per-batch state is
+<= d*w = 256 counter rows.
 
 Wire-up: ``parsed.writeStream.foreachBatch(lambda b, i:
 cms_apply_batch(b, i, store_dir, "user_id")).option(
@@ -39,14 +38,12 @@ from pyspark.sql import functions as F
 
 from parquet_exporter_spark.functions import dedup as _D
 from parquet_exporter_spark.streaming.partial_store import (
-    commit_compaction,
-    commit_partial,
+    MergeableSketch,
     committed_batches,
-    live_upto,
-    read_partials,
 )
 
 __all__ = [
+    "CMS",
     "CMS_D",
     "CMS_W",
     "cms_partial",
@@ -58,15 +55,16 @@ __all__ = [
     "compact_cms_store",
 ]
 
-# MUST stay in lockstep with queries/aggregates.py _CMS_D/_CMS_W (the
-# portable batch sketch family)
-CMS_D = 4
-CMS_W = 64
+# shared with the portable batch sketches (queries/aggregates.py)
+CMS_D = 4  # depth (hash functions)
+CMS_W = 64  # width (buckets per depth)
 
 
 def _bucket_rows(
     df: DataFrame, key_col: str, batch_col: str | None = None
 ) -> DataFrame:
+    """The (depth, bucket) cell of each row's key at every depth, with
+    ``batch_col`` kept alongside when set."""
     coeffs = _D.hash_coefficients(CMS_D)
     keep = [F.col(batch_col)] if batch_col else []
     h = df.select(
@@ -111,33 +109,19 @@ def cms_partial(
     )
 
 
-def cms_apply_batch(
-    batch_df: DataFrame, batch_id: int, store_dir: str, key_col: str
-) -> bool:
-    """Commit one micro-batch's counter partial. False on replay."""
-    return commit_partial(cms_partial(batch_df, key_col), batch_id, store_dir)
-
-
-def read_cms_counters(spark, store_dir: str) -> DataFrame | None:
-    """All live partials tagged with batch_id; None before the first
-    commit."""
-    return read_partials(spark, store_dir)
-
-
 def merge_cms(counters: DataFrame) -> DataFrame:
     """Counter addition over tagged partials — grouping-invariant, so
-    the merge equals the single-pass build cell for cell. Output
-    (depth, bucket, c)."""
+    the merge equals the single-pass build cell for cell, and compaction
+    is lossless (pinned in tests). Output (depth, bucket, c)."""
     return counters.groupBy("depth", "bucket").agg(
         F.sum("c").cast("long").alias("c")
     )
 
 
-def compact_cms_store(spark, store_dir: str, upto_batch: int) -> bool:
-    """Fold partials with batch_id <= bound into one. Lossless
-    (associative counter add), pinned in tests."""
-    old = live_upto(spark, store_dir, upto_batch)
-    return old is not None and commit_compaction(merge_cms(old), upto_batch, store_dir)
+CMS = MergeableSketch(cms_partial, merge_cms)
+cms_apply_batch = CMS.apply_batch  # (batch_df, batch_id, store_dir, key_col)
+read_cms_counters = CMS.read
+compact_cms_store = CMS.compact
 
 
 def serve_cms_estimates(spark, counters: DataFrame, probe_keys: list) -> DataFrame:
@@ -153,34 +137,8 @@ def serve_cms_estimates(spark, counters: DataFrame, probe_keys: list) -> DataFra
     # createDataFrame spreads a handful of rows over defaultParallelism
     # near-empty tasks per downstream operator
     probes = tiny_df(spark, [(str(k),) for k in probe_keys], "key string")
-    pb = (
-        probes.select("key", _D.base_hash_31(F.col("key")).alias("h"))
-        .select(
-            "key",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("depth"),
-                            (
-                                (F.lit(a) * F.col("h") + F.lit(b))
-                                % _D.MERSENNE_31
-                                % CMS_W
-                            ).alias("bucket"),
-                        )
-                        for i, (a, b) in enumerate(
-                            _D.hash_coefficients(CMS_D)
-                        )
-                    ]
-                )
-            ).alias("db"),
-        )
-        .select(
-            "key",
-            F.col("db.depth").alias("depth"),
-            F.col("db.bucket").alias("bucket"),
-        )
-    )
+    # the probe's (depth, bucket) cells, keeping the key alongside
+    pb = _bucket_rows(probes, "key", batch_col="key")
     return (
         pb.join(merged, ["depth", "bucket"], "left")
         .groupBy("key")

@@ -19,9 +19,8 @@ integer arithmetic only, no libm in any decision, one map-side-
 combinable aggregate per batch. Per-batch state is O(octaves * 8)
 counter rows; the store compacts losslessly.
 
-Store protocol: partial_store (per batch, one fsynced file from one
-Arrow collect, published before its durable marker; replays no-op;
-compaction supersedes bounded batches after its marker is durable).
+Store protocol: ``partial_store.MergeableSketch`` (the ``HDR`` spec
+below: partial ``hdr_partial``, fold ``merge_hdr``).
 
 Wire-up: ``parsed.writeStream.foreachBatch(lambda b, i:
 hdr_apply_batch(b, i, store_dir)).option("checkpointLocation", ...)``.
@@ -37,14 +36,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.streaming.partial_store import (
-    commit_compaction,
-    commit_partial,
+    MergeableSketch,
     committed_batches,
-    live_upto,
-    read_partials,
 )
 
 __all__ = [
+    "HDR",
     "HDR_SUB",
     "hdr_partial",
     "hdr_apply_batch",
@@ -55,8 +52,8 @@ __all__ = [
     "compact_hdr_store",
 ]
 
-# MUST stay in lockstep with queries/aggregates.py _HDR_SUB: 8 linear
-# subbuckets per bit-length octave -> relative bucket width <= 1/8.
+# shared with the portable batch sketches (queries/aggregates.py): 8
+# linear subbuckets per bit-length octave -> relative bucket width <= 1/8.
 HDR_SUB = 8
 
 
@@ -94,26 +91,11 @@ def hdr_partial(
     )
 
 
-def hdr_apply_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_dir: str,
-    value_col: str = "cents",
-) -> bool:
-    """Commit one micro-batch's histogram partial. False on replay."""
-    return commit_partial(hdr_partial(batch_df, value_col), batch_id, store_dir)
-
-
-def read_hdr_buckets(spark, store_dir: str) -> DataFrame | None:
-    """All live partials tagged with batch_id; None before the first
-    commit."""
-    return read_partials(spark, store_dir)
-
-
 def merge_hdr(buckets: DataFrame) -> DataFrame:
     """Counter add + bound min/max over tagged partials — all three
     folds associative, so the merge is grouping-invariant and equals
-    the single-pass build. Output (lvl, sub, c, lo, hi)."""
+    the single-pass build, and a compacted store's merged histogram is
+    IDENTICAL (pinned in tests). Output (lvl, sub, c, lo, hi)."""
     return buckets.groupBy("lvl", "sub").agg(
         F.sum("c").cast("long").alias("c"),
         F.min("lo").cast("long").alias("lo"),
@@ -121,12 +103,10 @@ def merge_hdr(buckets: DataFrame) -> DataFrame:
     )
 
 
-def compact_hdr_store(spark, store_dir: str, upto_batch: int) -> bool:
-    """Fold partials with batch_id <= bound into one. Lossless: the
-    compacted store's merged histogram is IDENTICAL (associative
-    counter add), pinned in tests."""
-    old = live_upto(spark, store_dir, upto_batch)
-    return old is not None and commit_compaction(merge_hdr(old), upto_batch, store_dir)
+HDR = MergeableSketch(hdr_partial, merge_hdr, "cents")
+hdr_apply_batch = HDR.apply_batch  # (batch_df, batch_id, store_dir, value_col="cents")
+read_hdr_buckets = HDR.read
+compact_hdr_store = HDR.compact
 
 
 def serve_hdr_quantiles(spark, buckets: DataFrame, probes: list[float]) -> DataFrame:

@@ -19,11 +19,10 @@ rendering — exact integers, no libm in any decision); the estimator
 keeps the indicator sum exact by integer scaling (s_scaled = sum
 2^(52-rho) + V*2^52) and applies the published linear-counting branch.
 
-Store protocol: partial_store (per batch, one fsynced file from one
-Arrow collect, published before its durable marker; replays no-op;
-compaction supersedes bounded batches after its marker is durable).
-Per-batch state is <= m = 512 register rows; the store holds
-O(k * 512) rows over k batches and compacts to 512.
+Store protocol: ``partial_store.MergeableSketch`` (the ``HLL`` spec
+below: partial ``hll_partial``, fold ``merge_hll``). Per-batch state is
+<= m = 512 register rows; the store holds O(k * 512) rows over k
+batches and compacts to 512.
 
 Wire-up: ``parsed.writeStream.foreachBatch(lambda b, i:
 hll_apply_batch(b, i, store_dir, "user_id")).option(
@@ -40,14 +39,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.streaming.partial_store import (
-    commit_compaction,
-    commit_partial,
+    MergeableSketch,
     committed_batches,
-    live_upto,
-    read_partials,
 )
 
 __all__ = [
+    "HLL",
     "HLL_REM",
     "HLL_M",
     "hll_partial",
@@ -59,16 +56,17 @@ __all__ = [
     "compact_hll_store",
 ]
 
-# MUST stay in lockstep with queries/aggregates.py _HLL_* (the portable
-# batch sketch family): 60-bit hash = 9-bit register index + 51-bit
-# remainder; rho in [1, 52].
+# Shared with the portable batch sketches (queries/aggregates.py):
+# 60-bit hash = 9-bit register index + 51-bit remainder; rho in [1, 52].
 HLL_HEX = 15  # md5 hex prefix chars -> 60-bit BIGINT-exact hash
-HLL_REM = 51
-HLL_M = 512
-HLL_RMAX = HLL_REM + 1
+HLL_REM = 51  # low-order hash bits that feed rho
+HLL_M = 512  # registers: std error 1.04/sqrt(512) ~ 4.6%
+HLL_RMAX = HLL_REM + 1  # rho of an all-zero remainder
+# alpha_m * m^2 * 2^RMAX, folded to ONE literal in Python so each engine
+# performs exactly one IEEE division by the exact integer register sum.
 HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
 HLL_NUM = HLL_ALPHA * HLL_M * HLL_M * float(1 << HLL_RMAX)
-HLL_LC_CUT = 2.5 * HLL_M
+HLL_LC_CUT = 2.5 * HLL_M  # below this raw estimate, linear counting wins
 
 
 def hll_partial(
@@ -110,32 +108,19 @@ def hll_partial(
     return rho.groupBy(*keys).agg(F.max("rho").cast("long").alias("r"))
 
 
-def hll_apply_batch(
-    batch_df: DataFrame, batch_id: int, store_dir: str, key_col: str
-) -> bool:
-    """Commit one micro-batch's register partial. False on replay."""
-    return commit_partial(hll_partial(batch_df, key_col), batch_id, store_dir)
-
-
-def read_hll_registers(spark, store_dir: str) -> DataFrame | None:
-    """All live partials tagged with batch_id; None before the first
-    commit."""
-    return read_partials(spark, store_dir)
-
-
 def merge_hll(regs: DataFrame) -> DataFrame:
     """Register-wise max over tagged partials — the exactly-associative
-    HLL merge. Output (bucket, r), <= m rows."""
+    HLL merge. Output (bucket, r), <= m rows. Because max is associative
+    and idempotent, a compacted store serves the IDENTICAL registers
+    (and therefore the identical estimate) as the uncompacted one —
+    pinned in tests."""
     return regs.groupBy("bucket").agg(F.max("r").cast("long").alias("r"))
 
 
-def compact_hll_store(spark, store_dir: str, upto_batch: int) -> bool:
-    """Fold partials with batch_id <= bound into one register partial.
-    Because max is associative and idempotent, the compacted store
-    serves the IDENTICAL registers (and therefore the identical
-    estimate) as the uncompacted one — pinned in tests."""
-    old = live_upto(spark, store_dir, upto_batch)
-    return old is not None and commit_compaction(merge_hll(old), upto_batch, store_dir)
+HLL = MergeableSketch(hll_partial, merge_hll)
+hll_apply_batch = HLL.apply_batch  # (batch_df, batch_id, store_dir, key_col)
+read_hll_registers = HLL.read
+compact_hll_store = HLL.compact
 
 
 def serve_hll_estimate(spark, regs: DataFrame) -> DataFrame:

@@ -16,10 +16,9 @@ Hashes are the portable 60-bit md5-prefix family (exact in BIGINT on
 both engines); the per-batch bottom-k is TakeOrderedAndProject —
 per-partition top-k, no global sort (the agg_kmv_distinct shape).
 
-Store protocol: partial_store (per batch, one fsynced file from one
-Arrow collect, published before its durable marker; replays no-op;
-compaction supersedes bounded batches after its marker is durable).
-Per-batch state is <= k = 128 hash rows.
+Store protocol: ``partial_store.MergeableSketch`` (the ``KMV`` spec
+below: partial ``kmv_partial``, fold ``merge_kmv``). Per-batch state is
+<= k = 128 hash rows.
 
 Wire-up: ``parsed.writeStream.foreachBatch(lambda b, i:
 kmv_apply_batch(b, i, store_dir, "user_id")).option(
@@ -36,14 +35,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.streaming.partial_store import (
-    commit_compaction,
-    commit_partial,
+    MergeableSketch,
     committed_batches,
-    live_upto,
-    read_partials,
 )
 
 __all__ = [
+    "KMV",
     "KMV_K",
     "KMV_HEX",
     "KMV_SPACE",
@@ -57,7 +54,7 @@ __all__ = [
     "kmv_jaccard_stores",
 ]
 
-# MUST stay in lockstep with queries/aggregates.py _KMV_K/_KMV_HEX
+# shared with the portable batch sketches (queries/aggregates.py)
 KMV_K = 128
 KMV_HEX = 15  # 60-bit hashes: exact in BIGINT on both engines
 KMV_SPACE = float(1 << 60)
@@ -94,34 +91,21 @@ def kmv_partial(
     )
 
 
-def kmv_apply_batch(
-    batch_df: DataFrame, batch_id: int, store_dir: str, key_col: str
-) -> bool:
-    """Commit one micro-batch's bottom-k partial. False on replay."""
-    return commit_partial(kmv_partial(batch_df, key_col), batch_id, store_dir)
-
-
-def read_kmv_hashes(spark, store_dir: str) -> DataFrame | None:
-    """All live partials tagged with batch_id; None before the first
-    commit."""
-    return read_partials(spark, store_dir)
-
-
 def merge_kmv(hashes: DataFrame) -> DataFrame:
     """Union + re-truncate over tagged partials: DISTINCT the <= n*k
     kept hashes, keep the k smallest — grouping-invariant by the
     bottom-k invariant, so the merged state equals the single-pass
-    whole-stream bottom-k exactly."""
+    whole-stream bottom-k exactly, and compaction is lossless (pinned
+    in tests)."""
     return (
         hashes.select("hv").distinct().orderBy("hv").limit(KMV_K)
     )
 
 
-def compact_kmv_store(spark, store_dir: str, upto_batch: int) -> bool:
-    """Fold partials with batch_id <= bound into one k-row partial.
-    Lossless (bottom-k invariant), pinned in tests."""
-    old = live_upto(spark, store_dir, upto_batch)
-    return old is not None and commit_compaction(merge_kmv(old), upto_batch, store_dir)
+KMV = MergeableSketch(kmv_partial, merge_kmv)
+kmv_apply_batch = KMV.apply_batch  # (batch_df, batch_id, store_dir, key_col)
+read_kmv_hashes = KMV.read
+compact_kmv_store = KMV.compact
 
 
 def serve_kmv_estimate(spark, hashes: DataFrame) -> DataFrame:

@@ -22,6 +22,15 @@ Reads scan every live file in ONE relation whose schema is pinned from
 the first file's footer (no schema-inference job), with ``batch_id``
 taken from each file's name — including the possibly multi-file
 partials ``commit_partials_batched`` (the one-job Spark bootstrap) writes.
+
+``MergeableSketch`` is the one maintainer the five sketches share. A
+sketch differs from another only in how a partial is built
+(``partial``) and how tagged partials fold back into partial rows
+(``fold``); its serve step stays in its own module. The spec writes the
+store protocol around them once: ``apply_batch`` commits one batch's
+partial, ``read`` returns the live partials, ``compact`` folds the live
+partials up to a bound into the compacted base, and ``bootstrap``
+commits every missing batch of a ``batch``-tagged input in one job.
 """
 
 from __future__ import annotations
@@ -29,12 +38,53 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # batch id (or compaction bound) of a store file, from its name
 _FILE_BATCH_ID = r"^(?:cent|compact)-(\d+)-"
+# the batch id column of a bootstrap's tagged input
+BATCH_COL = "batch"
+
+
+@dataclass(frozen=True)
+class MergeableSketch:
+    """A sketch maintained on a partial store. ``partial(df, col,
+    batch_col=None)`` builds one batch's partial rows (with
+    ``batch_col``, every batch's rows keyed by it); ``fold(tagged)``
+    merges batch_id-tagged partials into rows with the partial's
+    columns; ``col`` is the default input column."""
+
+    partial: Callable[..., DataFrame]
+    fold: Callable[[DataFrame], DataFrame]
+    col: str | None = None
+
+    def apply_batch(
+        self, batch_df: DataFrame, batch_id: int, store_dir: str, col: str | None = None
+    ) -> bool:
+        """Commit one micro-batch's partial. False on replay."""
+        return commit_partial(self.partial(batch_df, col or self.col), batch_id, store_dir)
+
+    def read(self, spark, store_dir: str) -> DataFrame | None:
+        """All live partials tagged with batch_id; None before the first
+        commit."""
+        return read_partials(spark, store_dir)
+
+    def compact(self, spark, store_dir: str, upto_batch: int) -> bool:
+        """Fold the live partials with batch_id <= ``upto_batch`` into the
+        compacted base. False if nothing to fold or a compaction at or
+        above the bound exists."""
+        old = live_upto(spark, store_dir, upto_batch)
+        return old is not None and commit_compaction(self.fold(old), upto_batch, store_dir)
+
+    def bootstrap(self, df: DataFrame, col: str, n_batches: int, store_dir: str) -> int:
+        """Commit batches 0..n_batches-1 of ``df`` (tagged by its
+        ``batch`` column) in one Spark job; the number committed."""
+        tagged = self.partial(df, col, batch_col=BATCH_COL)
+        return commit_partials_batched(tagged, list(range(n_batches)), store_dir)
 
 
 def committed_batches(store_dir: str) -> list[int]:
@@ -61,16 +111,13 @@ def commit_partial(df: DataFrame, batch_id: int, store_dir: str) -> bool:
 
 
 def commit_partials_batched(
-    tagged: DataFrame,
-    batch_ids: list[int],
-    store_dir: str,
-    batch_col: str = "batch",
+    tagged: DataFrame, batch_ids: list[int], store_dir: str
 ) -> int:
     """Bootstrap commit: write EVERY still-uncommitted batch's partial
-    rows in ONE Spark job (a staging write partitioned by ``batch_col``,
+    rows in ONE Spark job (a staging write partitioned by ``BATCH_COL``,
     so per-batch windows and aggregates run as partitioned work in one
     pass), then publish each batch under the same marker protocol
-    ``commit_partial`` uses. ``tagged`` must carry ``batch_col`` plus the
+    ``commit_partial`` uses. ``tagged`` must carry ``BATCH_COL`` plus the
     partial's columns in their committed order. Already-committed
     batches are left untouched, and a crash mid-publish leaves later
     batches uncommitted for the next call to finish.
@@ -83,16 +130,16 @@ def commit_partials_batched(
         return 0
     staging = os.path.join(store_dir, "_staging_bootstrap")
     (
-        tagged.filter(F.col(batch_col).isin([int(b) for b in todo]))
+        tagged.filter(F.col(BATCH_COL).isin([int(b) for b in todo]))
         # one hash partition per batch -> one staged file per batch
-        .repartition(len(todo), F.col(batch_col))
+        .repartition(len(todo), F.col(BATCH_COL))
         .write.mode("overwrite")
-        .partitionBy(batch_col)
+        .partitionBy(BATCH_COL)
         .parquet(staging)
     )
     for b in todo:
         files = sorted(
-            glob.glob(os.path.join(staging, f"{batch_col}={b}", "*.parquet"))
+            glob.glob(os.path.join(staging, f"{BATCH_COL}={b}", "*.parquet"))
         )
         if files:
             _remove_files(store_dir, "cent", b)
@@ -101,7 +148,7 @@ def commit_partials_batched(
         else:
             # empty batch: publish an empty single-file partial so readers
             # (which treat a marker without files as corruption) stay sound
-            empty = tagged.drop(batch_col).filter(F.lit(False))
+            empty = tagged.drop(BATCH_COL).filter(F.lit(False))
             _publish(empty.toArrow(), store_dir, "cent", b)
         _write_marker(os.path.join(store_dir, f"_batch-{b}.committed"), b)
     shutil.rmtree(staging, ignore_errors=True)

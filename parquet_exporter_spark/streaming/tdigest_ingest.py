@@ -12,9 +12,7 @@ Per micro-batch:
   tail distance -> bit-length level -> 4-way sub-split; exact integer
   arithmetic throughout) — O(log batch) centroid rows.
 - ``tdigest_apply_batch`` commits the centroids APPEND-ONLY through
-  the partial_store protocol: one file published from one Arrow
-  collect, fsynced before its durable marker. A replay of a committed
-  batch is a no-op and an uncommitted orphan is never read.
+  ``partial_store.MergeableSketch`` (the ``TDIGEST`` spec below).
 - ``serve_tdigest_quantiles`` merges ALL committed partials without
   touching data rows — the agg_tdigest_merged re-bin: centroids sorted
   by value bounds, cumulative weight assigns each centroid's midpoint
@@ -29,13 +27,12 @@ exact integers; the one IEEE divide is deterministic on both engines.
 
 Scale shape: state is O(k log n) centroid rows (k = committed batches).
 ``compact_tdigest_store`` folds all live partials up to a bound into
-one partial through the same re-bin and commits it with the
-partial_store compaction protocol. The fold is ACCURACY-preserving,
-not content-identical: re-binning a re-bin can place mass in different
-dyadic cells than one flat merge would, so the pinned contract is
-total-weight and value-bound conservation plus the t-digest rank-error
-bound on every served quantile (tests/test_streaming.py), never
-bucket-level equality. Serving never re-reads data either way.
+one partial through the same re-bin (``_refold``). The fold is
+ACCURACY-preserving, not content-identical: re-binning a re-bin can
+place mass in different dyadic cells than one flat merge would, so the
+pinned contract is total-weight and value-bound conservation plus the
+t-digest rank-error bound on every served quantile
+(tests/test_streaming.py), never bucket-level equality. Serving never re-reads data either way.
 
 Wire-up: ``parsed.writeStream.foreachBatch(lambda b, i:
 tdigest_apply_batch(b, i, store_dir)).option("checkpointLocation", ...)``.
@@ -51,14 +48,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.streaming.partial_store import (
-    commit_compaction,
-    commit_partial,
+    MergeableSketch,
     committed_batches,
-    live_upto,
-    read_partials,
 )
 
 __all__ = [
+    "TDIGEST",
     "TD_SUB",
     "tdigest_partial",
     "tdigest_apply_batch",
@@ -69,8 +64,8 @@ __all__ = [
     "compact_tdigest_store",
 ]
 
-# dyadic sub-buckets per level — MUST stay in lockstep with
-# queries/aggregates.py _TD_SUB (the batch sketch family)
+# dyadic sub-buckets per level (rank error <= d/4 at tail distance d),
+# shared with the batch sketches (queries/aggregates.py)
 TD_SUB = 4
 
 
@@ -134,47 +129,6 @@ def tdigest_partial(
     )
 
 
-def tdigest_apply_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_dir: str,
-    value_col: str = "cents",
-) -> bool:
-    """Commit one micro-batch's partial digest to ``store_dir`` via the
-    shared append-only partial_store protocol. Returns False for a
-    replayed (already-committed) batch, True after a commit."""
-    return commit_partial(tdigest_partial(batch_df, value_col), batch_id, store_dir)
-
-
-def read_tdigest_centroids(spark, store_dir: str) -> DataFrame | None:
-    """All live partials (newest compacted fold + batches above its
-    bound), tagged with batch_id; None before the first commit."""
-    return read_partials(spark, store_dir)
-
-
-def compact_tdigest_store(spark, store_dir: str, upto_batch: int) -> bool:
-    """Fold every live partial with batch_id <= ``upto_batch`` into ONE
-    partial through the merge re-bin and commit it as the store's
-    compacted base (older files deleted only after the durable marker).
-    False if nothing to fold or a newer compaction exists. The fold is
-    accuracy-preserving (see module docstring), so after compaction the
-    store serves the same n and value bounds and every quantile stays
-    inside the t-digest rank-error bound."""
-    old = live_upto(spark, store_dir, upto_batch)
-    if old is None:
-        return False
-    folded = merge_tdigest(old).select(
-        F.col("side2").alias("side"),
-        F.col("lvl2").alias("lvl"),
-        F.col("sub2").alias("sub"),
-        F.col("weight").alias("w"),
-        F.col("mlo").alias("lo"),
-        F.col("mhi").alias("hi"),
-        F.col("msc").alias("sc"),
-    )
-    return commit_compaction(folded, upto_batch, store_dir)
-
-
 def merge_tdigest(cent: DataFrame) -> DataFrame:
     """The agg_tdigest_merged re-bin over a tagged centroid table:
     sort by (lo, hi, batch_id, side, lvl, sub), cumulative weight,
@@ -229,6 +183,28 @@ def merge_tdigest(cent: DataFrame) -> DataFrame:
         (F.max(F.col("cw") + F.col("w")) - 1).cast("long").alias("cw_end"),
         F.first("n").cast("long").alias("n"),
     )
+
+
+def _refold(cent: DataFrame) -> DataFrame:
+    """The compaction fold: the merge re-bin renamed back to the
+    partial's columns. Accuracy-preserving (see module docstring), so a
+    compacted store serves the same n and value bounds and every
+    quantile stays inside the t-digest rank-error bound."""
+    return merge_tdigest(cent).select(
+        F.col("side2").alias("side"),
+        F.col("lvl2").alias("lvl"),
+        F.col("sub2").alias("sub"),
+        F.col("weight").alias("w"),
+        F.col("mlo").alias("lo"),
+        F.col("mhi").alias("hi"),
+        F.col("msc").alias("sc"),
+    )
+
+
+TDIGEST = MergeableSketch(tdigest_partial, _refold, "cents")
+tdigest_apply_batch = TDIGEST.apply_batch  # (batch_df, batch_id, store_dir, value_col="cents")
+read_tdigest_centroids = TDIGEST.read
+compact_tdigest_store = TDIGEST.compact
 
 
 def serve_tdigest_quantiles(

@@ -143,7 +143,7 @@ def test_mixed_store_reads_like_per_batch_union(spark, tmp_path, sketch):
     build, compact = SKETCHES[sketch]
     df, parts = _batches(spark, 6)
     store = str(tmp_path / "store")
-    assert commit_partials_batched(build(df, "batch"), [0, 1, 3], store, "batch") == 3
+    assert commit_partials_batched(build(df, "batch"), [0, 1, 3], store) == 3
     assert commit_partial(build(parts[2]), 2, store)
     assert compact(spark, store, 1)  # folds the bootstrap's batches 0 and 1
     _spark_commit(build(parts[4]), 4, store, nfiles=2)

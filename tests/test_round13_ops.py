@@ -256,14 +256,11 @@ def test_bloom_timestamp_probe_across_timezones(spark):
 
 
 def test_cms_merge_counter_add_is_exact(spark, sf_dir):
-    from parquet_exporter_spark.queries.aggregates import (
-        _CMS_D,
-        _CMS_W,
-        agg_cms_merge,
-    )
+    from parquet_exporter_spark.queries.aggregates import agg_cms_merge
+    from parquet_exporter_spark.streaming.cms_ingest import CMS_D, CMS_W
 
     rows = agg_cms_merge(spark, sf_dir).collect()
-    assert 0 < len(rows) <= _CMS_D * _CMS_W
+    assert 0 < len(rows) <= CMS_D * CMS_W
     assert all(r.merge_exact for r in rows)
     assert all(r.c_half0 + r.c_half1 == r.merged_c == r.whole_c for r in rows)
 

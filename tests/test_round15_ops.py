@@ -13,7 +13,9 @@ Pins the equality laws behind the round's internal restructures:
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,7 +63,7 @@ def test_batched_bootstrap_equals_per_batch_store(spark, tmp_path, sketch):
             loop_store,
         )
     boot_store = str(tmp_path / "boot")
-    n = commit_partials_batched(build(df, "batch"), [0, 1, 2], boot_store, "batch")
+    n = commit_partials_batched(build(df, "batch"), [0, 1, 2], boot_store)
     assert n == 3
     assert committed_batches(boot_store) == [0, 1, 2]
     assert _rows(spark, boot_store) == _rows(spark, loop_store)
@@ -69,8 +71,9 @@ def test_batched_bootstrap_equals_per_batch_store(spark, tmp_path, sketch):
 
 def test_batched_bootstrap_skips_committed_batches(spark, tmp_path):
     """Exactly-once posture: batches with durable markers are left
-    untouched (files and marker), only the missing ones are published."""
-    from parquet_exporter_spark.streaming.hdr_ingest import hdr_partial
+    untouched (files and marker), only the missing ones are published,
+    and a bootstrap over a fully committed store runs no Spark job."""
+    from parquet_exporter_spark.streaming.hdr_ingest import HDR, hdr_partial
 
     df = spark.createDataFrame(
         [(i % 50 + 1, i % 3) for i in range(120)], "v long, batch long"
@@ -80,12 +83,26 @@ def test_batched_bootstrap_skips_committed_batches(spark, tmp_path):
     before = sorted(glob.glob(os.path.join(store, "cent-00000001-*.parquet")))
     stamps = [os.path.getmtime(p) for p in before]
 
-    n = commit_partials_batched(hdr_partial(df, "v", batch_col="batch"), [0, 1, 2], store, "batch")
+    n = commit_partials_batched(hdr_partial(df, "v", batch_col="batch"), [0, 1, 2], store)
     assert n == 2
     assert committed_batches(store) == [0, 1, 2]
     after = sorted(glob.glob(os.path.join(store, "cent-00000001-*.parquet")))
     assert after == before
     assert [os.path.getmtime(p) for p in after] == stamps
+
+    sc = spark.sparkContext
+    group = f"bootstrap_{os.getpid()}"
+    sc.setJobGroup(group, "bootstrap job-count pin")
+    try:
+        assert HDR.bootstrap(df, "v", 3, store) == 0
+        jobs_to_skip = sc.statusTracker().getJobIdsForGroup(group)
+        df.count()  # control: the tracker does see this group's jobs
+        jobs_to_count = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs_to_skip == []
+    assert jobs_to_count
     # the merged store equals a full per-batch build
     loop_store = str(tmp_path / "loop")
     for b in range(3):
@@ -95,6 +112,47 @@ def test_batched_bootstrap_skips_committed_batches(spark, tmp_path):
             loop_store,
         )
     assert _rows(spark, store) == _rows(spark, loop_store)
+
+
+class _Stop(Exception):
+    pass
+
+
+@pytest.mark.parametrize(
+    "twin, table, tag",
+    [
+        ("stream_tdigest_twin", "lineitem", "stdigest"),
+        ("stream_hll_twin", "lineitem", "shll"),
+        ("stream_hdr_twin", "lineitem", "shdr"),
+        ("stream_cms_twin", "orders", "scms"),
+        ("stream_kmv_twin", "lineitem", "skmv"),
+    ],
+)
+def test_twin_scratch_store_path_is_stable(sf_dir, monkeypatch, twin, table, tag):
+    """Each sketch twin keeps the scratch store path it has always used
+    (tag + sha256 of the source files' path:mtime:size), so stores
+    already on disk are reused, not rebuilt."""
+    from parquet_exporter_spark.queries import streaming
+
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    files = sorted(glob.glob(src)) or [src]
+    version = "|".join(
+        f"{p}:{os.path.getmtime(p):.6f}:{os.path.getsize(p)}" for p in files
+    )
+    digest = hashlib.sha256((tag + ":" + version).encode()).hexdigest()[:12]
+    want = os.path.join(tempfile.gettempdir(), f"pes_{tag}_{digest}")
+
+    seen = []
+    scratch = streaming._stream_scratch
+
+    def spy(*args):
+        seen.append(scratch(*args))
+        raise _Stop  # stop before the twin touches Spark
+
+    monkeypatch.setattr(streaming, "_stream_scratch", spy)
+    with pytest.raises(_Stop):
+        getattr(streaming, twin)(None, sf_dir)
+    assert seen == [want]
 
 
 def test_pq_expr_literals_round_trip_exactly(spark):
