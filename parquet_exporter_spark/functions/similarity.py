@@ -128,9 +128,16 @@ def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
     tests/test_round15_ops.py pins), so buckets, candidates and scores
     are unchanged. Construction measured 1.7-2.0 s -> ~0.1 s for the
     8-table lsh_topk plan."""
+    from parquet_exporter_spark.operators.pq import sql_double_literal
+
+    if isinstance(vec, Column):
+        raise TypeError(
+            "lsh_bucket: vec must be a column name or SQL expression string, "
+            "not a Column"
+        )
 
     def _dot_sql(plane: list[float]) -> str:
-        arr = "array(" + ", ".join(repr(float(x)) + "D" for x in plane) + ")"
+        arr = "array(" + ", ".join(sql_double_literal(x) for x in plane) + ")"
         return (
             f"aggregate(zip_with({vec}, {arr}, (x, y) -> "
             f"(CAST(x AS DOUBLE) * CAST(y AS DOUBLE))), 0.0D, "

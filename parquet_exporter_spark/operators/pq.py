@@ -24,12 +24,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _fmt_double(v: float) -> str:
+_NON_FINITE = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
+
+
+def sql_double_literal(v: float) -> str:
     """SQL double literal that parses back to the identical IEEE double:
     Python ``repr`` emits the shortest round-tripping decimal and Java's
     ``Double.parseDouble`` is correctly rounded, so the value survives the
-    string trip bit-for-bit. The D suffix pins the SQL type to DOUBLE."""
-    return repr(float(v)) + "D"
+    string trip bit-for-bit. The D suffix pins the SQL type to DOUBLE.
+    NaN and the infinities have no decimal spelling, so they are written
+    as a string cast."""
+    s = repr(float(v))
+    if s in _NON_FINITE:
+        return f"CAST('{_NON_FINITE[s]}' AS DOUBLE)"
+    return s + "D"
 
 
 def _dists(sub_name: str, cents: list[list[float]]):
@@ -48,10 +56,10 @@ def _dists(sub_name: str, cents: list[list[float]]):
     as ONE ``F.expr`` string instead of ~150 py4j Column calls per
     subspace (each F.lit/F.array/lambda is a driver round-trip; measured
     2.41 s -> 0.14 s for 8 subspace trees built twice per model fit).
-    ``_fmt_double`` makes the literal trip exact, asserted bit-identical
-    against the Column-built tree in the suite."""
+    ``sql_double_literal`` makes the literal trip exact, asserted
+    bit-identical against the Column-built tree in the suite."""
     books_sql = ", ".join(
-        "array(" + ", ".join(_fmt_double(v) for v in c) + ")" for c in cents
+        "array(" + ", ".join(sql_double_literal(v) for v in c) + ")" for c in cents
     )
     return F.expr(
         f"transform(array({books_sql}), c -> round(aggregate("

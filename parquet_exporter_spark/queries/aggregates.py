@@ -6,26 +6,69 @@ aggregation (map-side combine) — the shuffle carries one row per
 (partition, group), not per input row. Grouping keys are low-cardinality
 (returnflag/linestatus/segment/nation), so the final agg is tiny regardless
 of input scale; AQE coalesces the post-shuffle partitions.
+
+The portable sketch queries (agg_count_min_portable, agg_cms_merge,
+agg_hll_*, agg_kmv_*, agg_hdr_*, agg_tdigest_*) do not write a sketch of
+their own: each sketch's partial, merge, serve and cell live once, in
+its streaming module (parquet_exporter_spark/streaming/
+{cms,hll,kmv,hdr,tdigest}_ingest.py), and a batch sketch is a partial
+over the whole input. These queries add only the exact truth, the
+verdict columns (queries/_util.py) and the half/group split. Their
+oracle SQL spells each sketch out independently.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from parquet_exporter_spark.queries._util import rmoney, rratio
+from parquet_exporter_spark.queries._util import (
+    distinct_truth,
+    distinct_verdict,
+    hdr_merge_law,
+    hdr_serve_check,
+    rmoney,
+    rratio,
+    tdigest_rank_check,
+)
 from parquet_exporter_spark.registry import query
-from parquet_exporter_spark.streaming.cms_ingest import CMS_D, CMS_W
-from parquet_exporter_spark.streaming.hdr_ingest import HDR_SUB
+from parquet_exporter_spark.streaming.cms_ingest import (
+    CMS_D,
+    CMS_W,
+    cms_cells,
+    cms_partial,
+)
+from parquet_exporter_spark.streaming.hdr_ingest import (
+    HDR_SUB,
+    hdr_partial,
+    merge_hdr,
+    serve_hdr_quantiles,
+)
 from parquet_exporter_spark.streaming.hll_ingest import (
     HLL_LC_CUT,
     HLL_M,
     HLL_NUM,
     HLL_REM,
     HLL_RMAX,
+    hll_partial,
+    merge_hll,
+    serve_hll_estimate,
 )
-from parquet_exporter_spark.streaming.kmv_ingest import KMV_HEX, KMV_K, KMV_SPACE
-from parquet_exporter_spark.streaming.tdigest_ingest import TD_SUB
+from parquet_exporter_spark.streaming.kmv_ingest import (
+    KMV_HEX,
+    KMV_K,
+    KMV_SPACE,
+    kmv_estimate,
+    kmv_jaccard,
+    kmv_partial,
+    merge_kmv,
+)
+from parquet_exporter_spark.streaming.tdigest_ingest import (
+    TD_SUB,
+    serve_tdigest_quantiles,
+    tdigest_cell,
+    tdigest_partial,
+)
 from parquet_exporter_spark.tables import read_table, tiny_df
 
 
@@ -550,33 +593,10 @@ def _cms_oracle() -> str:
     ),
 )
 def agg_count_min_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_exporter_spark.functions import dedup as _D
-
     orders = read_table(spark, sf_dir, "orders")
-    coeffs = _D.hash_coefficients(CMS_D)
-    h = orders.select("o_custkey", _D.base_hash_31(F.col("o_custkey").cast("string")).alias("h"))
-    buck = h.select(
-        "o_custkey",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("depth"),
-                        (
-                            (F.lit(a) * F.col("h") + F.lit(b))
-                            % _D.MERSENNE_31
-                            % CMS_W
-                        ).alias("bucket"),
-                    )
-                    for i, (a, b) in enumerate(coeffs)
-                ]
-            )
-        ).alias("db"),
-    ).select("o_custkey", F.col("db.depth").alias("depth"), F.col("db.bucket").alias("bucket"))
-    sketch = buck.groupBy("depth", "bucket").agg(F.count(F.lit(1)).alias("c"))
-    keys = buck.distinct()
+    keys = cms_cells(orders, "o_custkey", batch_col="o_custkey").distinct()
     est = (
-        keys.join(F.broadcast(sketch), ["depth", "bucket"])
+        keys.join(F.broadcast(cms_partial(orders, "o_custkey")), ["depth", "bucket"])
         .groupBy("o_custkey")
         .agg(F.min("c").alias("cms_estimate"))
     )
@@ -1280,6 +1300,116 @@ def _tdigest_centroids_sql() -> str:
     """
 
 
+def _with_td_cell(ranked: DataFrame, n: Column) -> DataFrame:
+    """``ranked`` (with a 0-based rank r0 among ``n``) plus the rank's
+    dyadic cell (side, lvl, sub) — ``tdigest_cell``, the one the streaming
+    t-digest builds and merges with."""
+    side, lvl, sub = tdigest_cell(F.col("r0"), n)
+    return ranked.select("*", side.alias("side"), lvl.alias("lvl"), sub.alias("sub"))
+
+
+def _td_ranked(spark: SparkSession, sf_dir: str, grp: str | None = None) -> DataFrame:
+    """lineitem prices as cents with their 0-based price rank r0 and count
+    n — within ``grp`` (kept as column grp) when set — and the rank's
+    dyadic cell. These batch digests keep per-row exact ranks, which a
+    ``tdigest_partial`` does not carry."""
+    li = read_table(spark, sf_dir, "lineitem")
+    by = ["grp"] if grp else []
+    ranked = li.select(
+        *([F.col(grp).alias("grp")] if grp else []),
+        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        "l_extendedprice",
+    ).select(
+        *by,
+        "cents",
+        (F.row_number().over(Window.partitionBy(*by).orderBy("l_extendedprice")) - 1)
+        .cast("long")
+        .alias("r0"),
+        F.count(F.lit(1)).over(Window.partitionBy(*by)).cast("long").alias("n"),
+    )
+    return _with_td_cell(ranked, F.col("n"))
+
+
+def _td_sketch(bucketed: DataFrame) -> DataFrame:
+    """One centroid per dyadic cell: weight, exact rank span, exact cents
+    bounds and the round-6 mean price."""
+    return bucketed.groupBy("side", "lvl", "sub").agg(
+        F.count(F.lit(1)).cast("long").alias("weight"),
+        F.min("r0").cast("long").alias("min_rank"),
+        F.max("r0").cast("long").alias("max_rank"),
+        F.min("cents").cast("long").alias("lo_cents"),
+        F.max("cents").cast("long").alias("hi_cents"),
+        F.round(
+            F.sum("cents").cast("double") / (100.0 * F.count(F.lit(1))), 6
+        ).alias("mean_price"),
+    )
+
+
+def _td_rank_cells(bucketed: DataFrame, *by: str) -> DataFrame:
+    """The serving centroids: exact rank span, exact cents bounds and n
+    per dyadic cell (per ``by`` group)."""
+    return bucketed.groupBy(*by, "side", "lvl", "sub").agg(
+        F.min("r0").cast("long").alias("min_rank"),
+        F.max("r0").cast("long").alias("max_rank"),
+        F.min("cents").cast("long").alias("lo_cents"),
+        F.max("cents").cast("long").alias("hi_cents"),
+        F.first("n").cast("long").alias("n"),
+    )
+
+
+def _td_rank_quantiles(
+    spark: SparkSession, bucketed: DataFrame, probes: tuple, *by: str
+) -> DataFrame:
+    """Quantiles served per ``by`` group off the rank-span centroids: each
+    probe p's target rank t = floor(p * (n-1)) falls in exactly one
+    centroid's exact rank span and interpolates inside its exact cents
+    bounds, next to the true rank-t value and the bounds verdict."""
+    bucketed = bucketed.persist()
+    try:
+        cent = _td_rank_cells(bucketed, *by)
+        pdf = tiny_df(spark, [(p,) for p in probes], "p double")
+        targets = (
+            cent.groupBy(*by)
+            .agg(F.first("n").alias("n"))
+            .crossJoin(F.broadcast(pdf))
+            .select(
+                *by, "p", F.floor(F.col("p") * (F.col("n") - 1)).cast("long").alias("t")
+            )
+        )
+        hit = targets.join(F.broadcast(cent), list(by) or None).filter(
+            (F.col("t") >= F.col("min_rank")) & (F.col("t") <= F.col("max_rank"))
+        )
+        exact = (
+            targets.withColumnRenamed("t", "r0")
+            .join(bucketed.select(*by, "r0", "cents"), [*by, "r0"])
+            .select(*by, "p", F.col("cents").alias("exact_cents"))
+        )
+        est = F.col("lo_cents") + F.when(
+            F.col("max_rank") > F.col("min_rank"),
+            (F.col("hi_cents") - F.col("lo_cents")).cast("double")
+            * (
+                (F.col("t") - F.col("min_rank")).cast("double")
+                / (F.col("max_rank") - F.col("min_rank")).cast("double")
+            ),
+        ).otherwise(F.lit(0.0))
+        out = hit.join(exact, [*by, "p"]).select(
+            *by,
+            "p",
+            F.col("t").alias("target_rank"),
+            (F.col("max_rank") - F.col("min_rank") + 1)
+            .cast("long")
+            .alias("bucket_weight"),
+            F.round(est / 100.0, 4).alias("est_price"),
+            F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
+            F.col("exact_cents")
+            .between(F.col("lo_cents"), F.col("hi_cents"))
+            .alias("within_bucket_bounds"),
+        )
+        return out.localCheckpoint(eager=True)
+    finally:
+        bucketed.unpersist()
+
+
 @query(
     "agg_tdigest_sketch",
     oracle=f"""
@@ -1324,38 +1454,7 @@ def _tdigest_centroids_sql() -> str:
     ),
 )
 def agg_tdigest_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    w = Window.orderBy("l_extendedprice")
-    ranked = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.row_number().over(w) - 1).cast("long").alias("r0"),
-    ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
-    keyed = ranked.select(
-        "cents",
-        "r0",
-        "n",
-        F.when(2 * F.col("r0") < F.col("n"), 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < F.col("n"), F.col("r0") + 1)
-        .otherwise(F.col("n") - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl", (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long")
-    )
-    p = F.expr("shiftleft(1L, CAST(lvl AS INT))")
-    bucketed = lvled.withColumn(
-        "sub", F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})") / p
-    ).withColumn("sub", F.floor("sub").cast("long"))
-    return bucketed.groupBy("side", "lvl", "sub").agg(
-        F.count(F.lit(1)).cast("long").alias("weight"),
-        F.min("r0").cast("long").alias("min_rank"),
-        F.max("r0").cast("long").alias("max_rank"),
-        F.min("cents").cast("long").alias("lo_cents"),
-        F.max("cents").cast("long").alias("hi_cents"),
-        F.round(
-            F.sum("cents").cast("double") / (100.0 * F.count(F.lit(1))), 6
-        ).alias("mean_price"),
-    )
+    return _td_sketch(_td_ranked(spark, sf_dir))
 
 
 _TD_PROBES = (0.001, 0.01, 0.25, 0.5, 0.9, 0.99, 0.999)
@@ -1419,79 +1518,7 @@ _TD_PROBES = (0.001, 0.01, 0.25, 0.5, 0.9, 0.99, 0.999)
     ),
 )
 def agg_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    w = Window.orderBy("l_extendedprice")
-    ranked = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.row_number().over(w) - 1).cast("long").alias("r0"),
-    ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
-    keyed = ranked.select(
-        "cents",
-        "r0",
-        "n",
-        F.when(2 * F.col("r0") < F.col("n"), 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < F.col("n"), F.col("r0") + 1)
-        .otherwise(F.col("n") - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl", (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long")
-    )
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})")
-            / F.expr("shiftleft(1L, CAST(lvl AS INT))")
-        ).cast("long"),
-    ).persist()
-    try:
-        cent = bucketed.groupBy("side", "lvl", "sub").agg(
-            F.min("r0").cast("long").alias("min_rank"),
-            F.max("r0").cast("long").alias("max_rank"),
-            F.min("cents").cast("long").alias("lo_cents"),
-            F.max("cents").cast("long").alias("hi_cents"),
-            F.first("n").cast("long").alias("n"),
-        )
-        probes = tiny_df(spark, [(p,) for p in _TD_PROBES], "p double")
-        targets = (
-            probes.crossJoin(F.broadcast(cent.select("n").limit(1)))
-            .select("p", F.floor(F.col("p") * (F.col("n") - 1)).cast("long").alias("t"))
-        )
-        hit = targets.join(
-            F.broadcast(cent),
-            (F.col("t") >= F.col("min_rank")) & (F.col("t") <= F.col("max_rank")),
-        )
-        exact = (
-            targets.withColumnRenamed("t", "r0")
-            .join(bucketed.select("r0", "cents"), "r0")
-            .select("p", F.col("cents").alias("exact_cents"))
-        )
-        est = F.col("lo_cents") + F.when(
-            F.col("max_rank") > F.col("min_rank"),
-            (F.col("hi_cents") - F.col("lo_cents")).cast("double")
-            * (
-                (F.col("t") - F.col("min_rank")).cast("double")
-                / (F.col("max_rank") - F.col("min_rank")).cast("double")
-            ),
-        ).otherwise(F.lit(0.0))
-        out = (
-            hit.join(exact, "p")
-            .select(
-                "p",
-                F.col("t").alias("target_rank"),
-                (F.col("max_rank") - F.col("min_rank") + 1)
-                .cast("long")
-                .alias("bucket_weight"),
-                F.round(est / 100.0, 4).alias("est_price"),
-                F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
-                F.col("exact_cents")
-                .between(F.col("lo_cents"), F.col("hi_cents"))
-                .alias("within_bucket_bounds"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        bucketed.unpersist()
+    return _td_rank_quantiles(spark, _td_ranked(spark, sf_dir), _TD_PROBES)
 
 
 @query(
@@ -1554,45 +1581,16 @@ def agg_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    h = li.select(
-        F.conv(F.substring(F.md5(F.col("l_partkey").cast("string")), 1, KMV_HEX), 16, 10)
-        .cast("long")
-        .alias("hv")
-    ).distinct()
-    # orderBy().limit(k) plans as TakeOrderedAndProject: each partition
-    # keeps its k smallest, the driver merges — no global sort exchange.
-    topk = h.orderBy("hv").limit(KMV_K)
-    stats = topk.agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.max("hv").cast("long").alias("mx"),
-    ).select(
+    # kmv_partial's orderBy().limit(k) plans as TakeOrderedAndProject: each
+    # partition keeps its k smallest before one final merge — no global sort.
+    est = kmv_estimate(kmv_partial(li, "l_partkey"))
+    return est.join(F.broadcast(distinct_truth(li, "l_partkey"))).select(
+        "k",
         "n_kept",
-        F.when(F.col("n_kept") == KMV_K, F.col("mx")).alias("kth"),
-    )
-    truth = li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("true_distinct")
-    )
-    est = F.when(F.col("kth").isNull(), F.col("n_kept").cast("double")).otherwise(
-        F.round((KMV_K - 1) * F.lit(KMV_SPACE) / F.col("kth").cast("double"))
-    )
-    return (
-        stats.join(F.broadcast(truth))
-        .select(
-            F.lit(KMV_K).cast("long").alias("k"),
-            "n_kept",
-            F.col("kth").alias("kth_hash"),
-            est.cast("long").alias("est_distinct"),
-            "true_distinct",
-            F.round(
-                F.abs(est.cast("long").cast("double") - F.col("true_distinct"))
-                / F.col("true_distinct"),
-                6,
-            ).alias("rel_error"),
-            (
-                F.abs(est.cast("long").cast("double") - F.col("true_distinct"))
-                <= 0.35 * F.col("true_distinct") + 1
-            ).alias("within_bound"),
-        )
+        F.col("kth").alias("kth_hash"),
+        "est_distinct",
+        "true_distinct",
+        *distinct_verdict(0.35),
     )
 
 
@@ -1664,35 +1662,9 @@ def _cms_merge_oracle() -> str:
     ),
 )
 def agg_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from parquet_exporter_spark.functions import dedup as _D
-
     orders = read_table(spark, sf_dir, "orders")
-    coeffs = _D.hash_coefficients(CMS_D)
-    h = orders.select(
-        (F.col("o_orderkey") % 2).alias("half"),
-        _D.base_hash_31(F.col("o_custkey").cast("string")).alias("h"),
-    )
-    buck = h.select(
-        "half",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("depth"),
-                        (
-                            (F.lit(a) * F.col("h") + F.lit(b))
-                            % _D.MERSENNE_31
-                            % CMS_W
-                        ).alias("bucket"),
-                    )
-                    for i, (a, b) in enumerate(coeffs)
-                ]
-            )
-        ).alias("db"),
-    ).select("half", F.col("db.depth").alias("depth"), F.col("db.bucket").alias("bucket"))
-    part_sketch = buck.groupBy("half", "depth", "bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
+    halves = orders.select("o_custkey", (F.col("o_orderkey") % 2).alias("half"))
+    part_sketch = cms_partial(halves, "o_custkey", batch_col="half")
     # THE MERGE: counter add over sketch states — input is <= 2*d*w rows.
     merged = part_sketch.groupBy("depth", "bucket").agg(
         F.sum(F.when(F.col("half") == 0, F.col("c")).otherwise(F.lit(0)))
@@ -1703,9 +1675,7 @@ def agg_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("c_half1"),
         F.sum("c").cast("long").alias("merged_c"),
     )
-    whole = buck.groupBy("depth", "bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("whole_c")
-    )
+    whole = cms_partial(orders, "o_custkey").withColumnRenamed("c", "whole_c")
     return merged.join(whole, ["depth", "bucket"]).select(
         "depth",
         "bucket",
@@ -1786,72 +1756,24 @@ def agg_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_kmv_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    h = li.select(
-        (F.col("l_orderkey") % 2).alias("half"),
-        F.conv(
-            F.substring(F.md5(F.col("l_partkey").cast("string")), 1, KMV_HEX),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("hv"),
-    ).distinct()
-    # per-half bottom-k: one ranking window partitioned by half
-    wh = Window.partitionBy("half").orderBy("hv")
-    part_topk = (
-        h.withColumn("rk", F.row_number().over(wh))
-        .filter(F.col("rk") <= KMV_K)
-        .select("half", "hv")
-    )
-    # THE MERGE: union + re-truncate over <= 2k sketch rows (distinct —
-    # the same partkey hash can appear under both halves).
-    merged = (
-        part_topk.select("hv").distinct().orderBy("hv").limit(KMV_K)
-    )
-    mstats = merged.agg(
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.max("hv").cast("long").alias("mx"),
-    ).select(
-        "n_kept",
-        F.when(F.col("n_kept") == KMV_K, F.col("mx")).alias("kth_merged"),
-    )
-    whole = h.select("hv").distinct().orderBy("hv").limit(KMV_K)
-    wstats = whole.agg(
-        F.count(F.lit(1)).cast("long").alias("wn"),
-        F.max("hv").cast("long").alias("wmx"),
-    ).select(
-        F.when(F.col("wn") == KMV_K, F.col("wmx")).alias("kth_whole"),
-    )
-    truth = li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("true_distinct")
-    )
-    est = F.when(
-        F.col("kth_merged").isNull(), F.col("n_kept").cast("double")
-    ).otherwise(
-        F.round(
-            (KMV_K - 1) * F.lit(KMV_SPACE) / F.col("kth_merged").cast("double")
-        )
-    )
+    halves = li.select("l_partkey", (F.col("l_orderkey") % 2).alias("half"))
+    # per-half bottom-k (one ranking window partitioned by half), then
+    # THE MERGE: union + re-truncate over <= 2k sketch rows
+    part_topk = kmv_partial(halves, "l_partkey", batch_col="half")
+    merged = kmv_estimate(merge_kmv(part_topk))
+    whole = kmv_estimate(kmv_partial(li, "l_partkey"))
     return (
-        mstats.join(F.broadcast(wstats))
-        .join(F.broadcast(truth))
+        merged.join(F.broadcast(whole.select(F.col("kth").alias("kth_whole"))))
+        .join(F.broadcast(distinct_truth(li, "l_partkey")))
         .select(
-            F.lit(KMV_K).cast("long").alias("k"),
+            "k",
             "n_kept",
-            "kth_merged",
+            F.col("kth").alias("kth_merged"),
             "kth_whole",
-            F.col("kth_merged").eqNullSafe(F.col("kth_whole")).alias("merge_exact"),
-            est.cast("long").alias("est_distinct"),
+            F.col("kth").eqNullSafe(F.col("kth_whole")).alias("merge_exact"),
+            "est_distinct",
             "true_distinct",
-            F.round(
-                F.abs(est.cast("long").cast("double") - F.col("true_distinct"))
-                / F.col("true_distinct"),
-                6,
-            ).alias("rel_error"),
-            (
-                F.abs(est.cast("long").cast("double") - F.col("true_distinct"))
-                <= 0.35 * F.col("true_distinct") + 1
-            ).alias("within_bound"),
+            *distinct_verdict(0.35),
         )
     )
 
@@ -1929,74 +1851,15 @@ def agg_kmv_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    h = li.select(
-        F.conv(
-            F.substring(F.md5(F.col("l_partkey").cast("string")), 1, KMV_HEX),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("hv")
-    ).distinct()
-    # exact integer div/mod on the 60-bit long (float / would round:
-    # 2^60 > 2^53) — DuckDB's BIGINT // matches Spark's div exactly
-    split = h.select(
-        F.expr(f"hv div {1 << HLL_REM}").alias("bucket"),
-        (F.col("hv") % (1 << HLL_REM)).alias("w"),
-    )
-    rho = split.select(
-        "bucket",
-        F.when(F.col("w") == 0, F.lit(HLL_RMAX))
-        .otherwise(
-            HLL_REM + 1 - F.length(F.conv(F.col("w").cast("string"), 10, 2))
-        )
-        .cast("long")
-        .alias("rho"),
-    )
-    regs = rho.groupBy("bucket").agg(F.max("rho").cast("long").alias("r"))
-    state = regs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nonempty"),
-        (F.lit(HLL_M) - F.count(F.lit(1))).cast("long").alias("v_empty"),
-        (
-            F.sum(F.expr(f"shiftleft(1L, CAST({HLL_RMAX} - r AS INT))"))
-            + (F.lit(HLL_M) - F.count(F.lit(1)))
-            * F.lit(1 << HLL_RMAX)
-        )
-        .cast("long")
-        .alias("s_scaled"),
-    )
-    raw = F.lit(HLL_NUM) / F.col("s_scaled").cast("double")
-    est = (
-        F.when(
-            (raw <= F.lit(HLL_LC_CUT)) & (F.col("v_empty") > 0),
-            F.round(
-                F.lit(float(HLL_M))
-                * F.log(F.lit(float(HLL_M)) / F.col("v_empty").cast("double"))
-            ),
-        )
-        .otherwise(F.round(raw))
-        .cast("long")
-    )
-    truth = li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("true_distinct")
-    )
-    withest = state.withColumn("est_distinct", est)
-    return withest.join(F.broadcast(truth)).select(
-        F.lit(HLL_M).cast("long").alias("m"),
+    est = serve_hll_estimate(spark, hll_partial(li, "l_partkey"))
+    return est.join(F.broadcast(distinct_truth(li, "l_partkey"))).select(
+        "m",
         "n_nonempty",
         "v_empty",
         "s_scaled",
         "est_distinct",
         "true_distinct",
-        F.round(
-            F.abs(F.col("est_distinct").cast("double") - F.col("true_distinct"))
-            / F.col("true_distinct"),
-            6,
-        ).alias("rel_error"),
-        (
-            F.abs(F.col("est_distinct").cast("double") - F.col("true_distinct"))
-            <= 0.15 * F.col("true_distinct") + 1
-        ).alias("within_bound"),
+        *distinct_verdict(0.15),
     )
 
 
@@ -2154,164 +2017,15 @@ def _td_half_centroids_sql() -> str:
 )
 def agg_tdigest_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    wh = Window.partitionBy("half").orderBy("l_extendedprice")
-    ranked = li.select(
+    cents = li.select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.col("l_orderkey") % 2).alias("half"),
-        "l_extendedprice",
-    ).select(
-        "cents",
-        "half",
-        (F.row_number().over(wh) - 1).cast("long").alias("r0"),
-        F.count(F.lit(1)).over(Window.partitionBy("half")).cast("long").alias("nh"),
+        (F.col("l_orderkey") % 2).alias("batch_id"),
     )
-    keyed = ranked.select(
-        "cents",
-        "half",
-        F.when(2 * F.col("r0") < F.col("nh"), 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < F.col("nh"), F.col("r0") + 1)
-        .otherwise(F.col("nh") - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl", (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long")
-    )
-    p2 = F.expr("shiftleft(1L, CAST(lvl AS INT))")
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})") / p2)
-        .cast("long"),
-    )
-    cent = bucketed.groupBy("half", "side", "lvl", "sub").agg(
-        F.count(F.lit(1)).cast("long").alias("w"),
-        F.min("cents").cast("long").alias("lo"),
-        F.max("cents").cast("long").alias("hi"),
-        F.sum("cents").cast("long").alias("sc"),
-    )
-    # THE MERGE: sort the O(log n) centroid rows by value bounds, assign
-    # each centroid's cum-weight midpoint rank to a merged dyadic cell.
-    # n = sum of centroid weights — computed over SKETCH rows, never a
-    # data-sized global window.
-    wo = Window.orderBy("lo", "hi", "half", "side", "lvl", "sub")
-    ordered = cent.withColumn(
-        "cw",
-        F.coalesce(
-            F.sum("w").over(wo.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).cast("long"),
-    ).withColumn(
-        "n",
-        F.sum("w")
-        .over(Window.partitionBy().rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-        .cast("long"),
-    )
-    rekeyed = ordered.withColumn("mid", F.col("cw") + F.expr("(w - 1) div 2"))
-    resided = rekeyed.select(
-        "*",
-        F.when(2 * F.col("mid") < F.col("n"), 0).otherwise(1).alias("side2"),
-        F.when(2 * F.col("mid") < F.col("n"), F.col("mid") + 1)
-        .otherwise(F.col("n") - F.col("mid"))
-        .alias("dd2"),
-    )
-    relvled = resided.withColumn(
-        "lvl2",
-        (F.length(F.conv(F.col("dd2").cast("string"), 10, 2)) - 1).cast("long"),
-    )
-    q2 = F.expr("shiftleft(1L, CAST(lvl2 AS INT))")
-    mbucket = relvled.withColumn(
-        "sub2",
-        F.floor(
-            F.expr(f"((dd2 - shiftleft(1L, CAST(lvl2 AS INT))) * {TD_SUB})") / q2
-        ).cast("long"),
-    )
-    mcent = mbucket.groupBy("side2", "lvl2", "sub2").agg(
-        F.sum("w").cast("long").alias("weight"),
-        F.min("lo").cast("long").alias("mlo"),
-        F.max("hi").cast("long").alias("mhi"),
-        F.sum("sc").cast("long").alias("msc"),
-        F.count(F.lit(1)).cast("long").alias("n_inputs"),
-        F.min("cw").cast("long").alias("cw_start"),
-        (F.max(F.col("cw") + F.col("w")) - 1).cast("long").alias("cw_end"),
-        F.first("n").cast("long").alias("n"),
-    )
-    probes = tiny_df(spark, [(p,) for p in _TD_PROBES], "p double")
-    targets = (
-        probes.crossJoin(F.broadcast(mcent.select("n").limit(1)))
-        .select("p", F.floor(F.col("p") * (F.col("n") - 1)).cast("long").alias("t"))
-    )
-    served = targets.join(
-        F.broadcast(mcent),
-        (F.col("t") >= F.col("cw_start")) & (F.col("t") <= F.col("cw_end")),
-    ).select(
-        "p",
-        "t",
-        "weight",
-        "n_inputs",
-        "n",
-        (
-            F.col("mlo")
-            + F.when(
-                F.col("weight") > 1,
-                (F.col("mhi") - F.col("mlo")).cast("double")
-                * (
-                    (F.col("t") - F.col("cw_start")).cast("double")
-                    / (F.col("weight") - 1).cast("double")
-                ),
-            ).otherwise(F.lit(0.0))
-        ).alias("est_cents"),
-    )
-    wg = Window.orderBy("l_extendedprice")
-    gr = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.row_number().over(wg) - 1).cast("long").alias("r0g"),
-    )
-    exact = (
-        served.select("p", F.col("t").alias("r0g"))
-        .join(gr, "r0g")
-        .select("p", F.col("cents").alias("exact_cents"))
-    )
-    ranks = (
-        gr.crossJoin(F.broadcast(served.select("p", "est_cents")))
-        .groupBy("p")
-        .agg(
-            F.sum(
-                F.when(F.col("cents") < F.col("est_cents"), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("lt"),
-            F.sum(
-                F.when(F.col("cents") <= F.col("est_cents"), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias("le"),
-        )
-    )
-    rank_err = (
-        F.when(F.col("lt") > F.col("t"), F.col("lt") - F.col("t"))
-        .when(F.col("le") - 1 < F.col("t"), F.col("t") - (F.col("le") - 1))
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    d_tail = (
-        F.when(F.col("t") + 1 < F.col("n") - F.col("t"), F.col("t") + 1)
-        .otherwise(F.col("n") - F.col("t"))
-        .cast("long")
-    )
-    return (
-        served.join(exact, "p")
-        .join(ranks, "p")
-        .select(
-            "p",
-            F.col("t").alias("target_rank"),
-            F.col("weight").alias("merged_weight"),
-            "n_inputs",
-            F.round(F.col("est_cents") / 100.0, 4).alias("est_price"),
-            F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
-            rank_err.alias("rank_err"),
-            d_tail.alias("d_tail"),
-            (rank_err.cast("double") <= 0.35 * d_tail + 8).alias("within_bound"),
-        )
-    )
+    # one partial digest per half, merged by the centroid re-bin and
+    # served off the merged sketch — the merge never touches data rows
+    halves = tdigest_partial(cents, batch_col="batch_id")
+    served = serve_tdigest_quantiles(spark, halves, list(_TD_PROBES))
+    return tdigest_rank_check(served, cents.select("cents"))
 
 
 @query(
@@ -2388,71 +2102,24 @@ def agg_tdigest_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    h = li.select(
-        (F.col("l_orderkey") % 2).alias("half"),
-        F.conv(
-            F.substring(F.md5(F.col("l_partkey").cast("string")), 1, KMV_HEX),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("hv"),
-    ).distinct()
-    rho = h.select(
-        "half",
-        F.expr(f"hv div {1 << HLL_REM}").alias("bucket"),
-        F.when(F.col("hv") % (1 << HLL_REM) == 0, F.lit(HLL_RMAX))
-        .otherwise(
-            HLL_REM
-            + 1
-            - F.length(
-                F.conv((F.col("hv") % (1 << HLL_REM)).cast("string"), 10, 2)
-            )
-        )
-        .cast("long")
-        .alias("rho"),
-    )
-    pregs = rho.groupBy("half", "bucket").agg(F.max("rho").cast("long").alias("r"))
+    halves = li.select("l_partkey", (F.col("l_orderkey") % 2).alias("half"))
+    pregs = hll_partial(halves, "l_partkey", batch_col="half")
     # THE MERGE: register-wise max over <= 2m sketch rows.
-    mregs = pregs.groupBy("bucket").agg(F.max("r").cast("long").alias("r"))
-    wregs = rho.groupBy("bucket").agg(F.max("rho").cast("long").alias("r"))
     mism = (
-        mregs.withColumnRenamed("r", "mr")
-        .join(wregs.withColumnRenamed("r", "wr"), "bucket", "full")
+        merge_hll(pregs)
+        .withColumnRenamed("r", "mr")
+        .join(
+            hll_partial(li, "l_partkey").withColumnRenamed("r", "wr"), "bucket", "full"
+        )
         .filter(~F.col("mr").eqNullSafe(F.col("wr")))
         .agg(F.count(F.lit(1)).cast("long").alias("n_register_mismatch"))
     )
-    mstate = mregs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nonempty"),
-        (F.lit(HLL_M) - F.count(F.lit(1))).cast("long").alias("v_empty"),
-        (
-            F.sum(F.expr(f"shiftleft(1L, CAST({HLL_RMAX} - r AS INT))"))
-            + (F.lit(HLL_M) - F.count(F.lit(1))) * F.lit(1 << HLL_RMAX)
-        )
-        .cast("long")
-        .alias("s_scaled"),
-    )
-    raw = F.lit(HLL_NUM) / F.col("s_scaled").cast("double")
-    est = (
-        F.when(
-            (raw <= F.lit(HLL_LC_CUT)) & (F.col("v_empty") > 0),
-            F.round(
-                F.lit(float(HLL_M))
-                * F.log(F.lit(float(HLL_M)) / F.col("v_empty").cast("double"))
-            ),
-        )
-        .otherwise(F.round(raw))
-        .cast("long")
-    )
-    truth = li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("true_distinct")
-    )
     return (
-        mstate.withColumn("est_distinct", est)
+        serve_hll_estimate(spark, pregs)
         .join(F.broadcast(mism))
-        .join(F.broadcast(truth))
+        .join(F.broadcast(distinct_truth(li, "l_partkey")))
         .select(
-            F.lit(HLL_M).cast("long").alias("m"),
+            "m",
             "n_nonempty",
             "v_empty",
             "s_scaled",
@@ -2460,19 +2127,7 @@ def agg_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_register_mismatch") == 0).alias("merge_exact"),
             "est_distinct",
             "true_distinct",
-            F.round(
-                F.abs(
-                    F.col("est_distinct").cast("double") - F.col("true_distinct")
-                )
-                / F.col("true_distinct"),
-                6,
-            ).alias("rel_error"),
-            (
-                F.abs(
-                    F.col("est_distinct").cast("double") - F.col("true_distinct")
-                )
-                <= 0.15 * F.col("true_distinct") + 1
-            ).alias("within_bound"),
+            *distinct_verdict(0.15),
         )
     )
 
@@ -2538,32 +2193,9 @@ def agg_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
-    hv = (
-        F.conv(
-            F.substring(F.md5(F.col("o_custkey").cast("string")), 1, KMV_HEX),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("hv")
-    )
-    a = orders.filter(F.col("o_orderkey") % 2 == 0).select(hv).distinct()
-    b = orders.filter(F.col("o_orderkey") % 2 == 1).select(hv).distinct()
-    u = a.union(b).distinct().orderBy("hv").limit(KMV_K)
-    marked = (
-        u.join(F.broadcast(a.withColumn("in_a", F.lit(1))), "hv", "left")
-        .join(F.broadcast(b.withColumn("in_b", F.lit(1))), "hv", "left")
-        .select(
-            F.when(
-                F.col("in_a").isNotNull() & F.col("in_b").isNotNull(), 1
-            )
-            .otherwise(0)
-            .alias("both")
-        )
-    )
-    stats = marked.agg(
-        F.count(F.lit(1)).cast("long").alias("n_union_sample"),
-        F.sum("both").cast("long").alias("n_both"),
+    stats = kmv_jaccard(
+        kmv_partial(orders.filter(F.col("o_orderkey") % 2 == 0), "o_custkey"),
+        kmv_partial(orders.filter(F.col("o_orderkey") % 2 == 1), "o_custkey"),
     )
     truth = (
         orders.groupBy("o_custkey")
@@ -2585,10 +2217,10 @@ def agg_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         stats.join(F.broadcast(truth))
         .select(
-            F.lit(KMV_K).cast("long").alias("k"),
+            "k",
             "n_union_sample",
             "n_both",
-            F.round(est_j, 6).alias("est_jaccard"),
+            "est_jaccard",
             F.round(ex_j, 6).alias("exact_jaccard"),
             F.round(F.abs(est_j - ex_j), 6).alias("abs_error"),
             (F.abs(est_j - ex_j) <= 0.30).alias("within_bound"),
@@ -2681,96 +2313,8 @@ _TDG_PROBES = (0.5, 0.95)
     ),
 )
 def agg_tdigest_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    wg = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
-    ranked = li.select(
-        F.col("l_returnflag").alias("grp"),
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        "l_extendedprice",
-    ).select(
-        "grp",
-        "cents",
-        (F.row_number().over(
-            Window.partitionBy("grp").orderBy("l_extendedprice")
-        ) - 1).cast("long").alias("r0"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("grp"))
-        .cast("long")
-        .alias("nh"),
-    )
-    keyed = ranked.select(
-        "grp",
-        "cents",
-        "r0",
-        "nh",
-        F.when(2 * F.col("r0") < F.col("nh"), 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < F.col("nh"), F.col("r0") + 1)
-        .otherwise(F.col("nh") - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl",
-        (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long"),
-    )
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})")
-            / F.expr("shiftleft(1L, CAST(lvl AS INT))")
-        ).cast("long"),
-    ).persist()
-    try:
-        cent = bucketed.groupBy("grp", "side", "lvl", "sub").agg(
-            F.min("r0").cast("long").alias("min_rank"),
-            F.max("r0").cast("long").alias("max_rank"),
-            F.min("cents").cast("long").alias("lo_cents"),
-            F.max("cents").cast("long").alias("hi_cents"),
-            F.first("nh").cast("long").alias("nh"),
-        )
-        groups = cent.groupBy("grp").agg(F.first("nh").alias("nh"))
-        probes = tiny_df(spark, [(p,) for p in _TDG_PROBES], "p double")
-        targets = groups.crossJoin(F.broadcast(probes)).select(
-            "grp",
-            "p",
-            F.floor(F.col("p") * (F.col("nh") - 1)).cast("long").alias("t"),
-        )
-        hit = targets.join(
-            F.broadcast(cent),
-            ["grp"],
-        ).filter(
-            (F.col("t") >= F.col("min_rank")) & (F.col("t") <= F.col("max_rank"))
-        )
-        exact = (
-            targets.join(
-                bucketed.select("grp", "r0", "cents"),
-                (F.col("r0") == F.col("t")) & (bucketed["grp"] == targets["grp"]),
-            )
-            .select(targets["grp"], "p", F.col("cents").alias("exact_cents"))
-        )
-        est = F.col("lo_cents") + F.when(
-            F.col("max_rank") > F.col("min_rank"),
-            (F.col("hi_cents") - F.col("lo_cents")).cast("double")
-            * (
-                (F.col("t") - F.col("min_rank")).cast("double")
-                / (F.col("max_rank") - F.col("min_rank")).cast("double")
-            ),
-        ).otherwise(F.lit(0.0))
-        out = hit.join(exact, ["grp", "p"]).select(
-            "grp",
-            "p",
-            F.col("t").alias("target_rank"),
-            (F.col("max_rank") - F.col("min_rank") + 1)
-            .cast("long")
-            .alias("bucket_weight"),
-            F.round(est / 100.0, 4).alias("est_price"),
-            F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
-            F.col("exact_cents")
-            .between(F.col("lo_cents"), F.col("hi_cents"))
-            .alias("within_bucket_bounds"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        bucketed.unpersist()
+    bucketed = _td_ranked(spark, sf_dir, "l_returnflag")
+    return _td_rank_quantiles(spark, bucketed, _TDG_PROBES, "grp")
 
 
 # CDF probes in cents: two in-range, one near each tail, one below the
@@ -2851,40 +2395,9 @@ _TD_CDF_PROBES = (1, 100000, 5000000, 10000000, 20000000)
     ),
 )
 def agg_tdigest_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = read_table(spark, sf_dir, "lineitem")
-    w = Window.orderBy("l_extendedprice")
-    ranked = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.row_number().over(w) - 1).cast("long").alias("r0"),
-    ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
-    keyed = ranked.select(
-        "cents",
-        "r0",
-        "n",
-        F.when(2 * F.col("r0") < F.col("n"), 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < F.col("n"), F.col("r0") + 1)
-        .otherwise(F.col("n") - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl",
-        (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long"),
-    )
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})")
-            / F.expr("shiftleft(1L, CAST(lvl AS INT))")
-        ).cast("long"),
-    ).persist()
+    bucketed = _td_ranked(spark, sf_dir).persist()
     try:
-        cent = bucketed.groupBy("side", "lvl", "sub").agg(
-            F.min("r0").cast("long").alias("min_rank"),
-            F.max("r0").cast("long").alias("max_rank"),
-            F.min("cents").cast("long").alias("lo_cents"),
-            F.max("cents").cast("long").alias("hi_cents"),
-            F.first("n").cast("long").alias("n"),
-        )
+        cent = _td_rank_cells(bucketed)
         probes = tiny_df(spark, [(v,) for v in _TD_CDF_PROBES], "v long")
         agg = (
             probes.crossJoin(F.broadcast(cent))
@@ -3080,85 +2593,11 @@ _HDR_PROBES = (0.5, 0.99)
 )
 def agg_hdr_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    w = Window.orderBy("l_extendedprice")
-    ranked = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        (F.row_number().over(w) - 1).cast("long").alias("r0"),
-    ).withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
-    lvled = ranked.withColumn(
-        "lvl", F.length(F.conv(F.col("cents").cast("string"), 10, 2)).cast("long")
+    cents = li.select(
+        F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents")
     )
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(
-                f"((cents - shiftleft(1L, CAST(lvl - 1 AS INT))) * {HDR_SUB})"
-            )
-            / F.expr("shiftleft(1L, CAST(lvl - 1 AS INT))")
-        ).cast("long"),
-    ).persist()
-    try:
-        hist = bucketed.groupBy("lvl", "sub").agg(
-            F.count(F.lit(1)).cast("long").alias("c"),
-            F.min("cents").cast("long").alias("lo"),
-            F.max("cents").cast("long").alias("hi"),
-            F.first("n").cast("long").alias("n"),
-        )
-        wo = Window.orderBy("lvl", "sub")
-        cum = hist.withColumn(
-            "cw",
-            F.coalesce(
-                F.sum("c").over(wo.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ).cast("long"),
-        )
-        probes = tiny_df(spark, [(p,) for p in _HDR_PROBES], "p double")
-        targets = (
-            probes.crossJoin(F.broadcast(cum.select("n").limit(1)))
-            .select(
-                "p",
-                F.floor(F.col("p") * (F.col("n") - 1)).cast("long").alias("t"),
-            )
-        )
-        hit = targets.join(
-            F.broadcast(cum),
-            (F.col("t") >= F.col("cw")) & (F.col("t") < F.col("cw") + F.col("c")),
-        )
-        exact = (
-            targets.withColumnRenamed("t", "r0")
-            .join(bucketed.select("r0", "cents"), "r0")
-            .select("p", F.col("cents").alias("exact_cents"))
-        )
-        est = F.col("lo") + F.when(
-            F.col("c") > 1,
-            (F.col("hi") - F.col("lo")).cast("double")
-            * (
-                (F.col("t") - F.col("cw")).cast("double")
-                / (F.col("c") - 1).cast("double")
-            ),
-        ).otherwise(F.lit(0.0))
-        out = hit.join(exact, "p").select(
-            "p",
-            F.col("t").alias("target_rank"),
-            F.col("c").alias("bucket_count"),
-            F.round(F.col("lo") / 100.0, 4).alias("bucket_lo"),
-            F.round(F.col("hi") / 100.0, 4).alias("bucket_hi"),
-            F.round(est / 100.0, 4).alias("est_price"),
-            F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
-            F.round(
-                (F.col("hi") - F.col("lo")).cast("double") / F.col("lo"), 6
-            ).alias("rel_bucket_width"),
-            F.col("exact_cents")
-            .between(F.col("lo"), F.col("hi"))
-            .alias("within_bucket"),
-            (
-                (F.col("hi") - F.col("lo")).cast("double") / F.col("lo")
-                <= 1.0 / HDR_SUB
-            ).alias("width_bound_ok"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        bucketed.unpersist()
+    served = serve_hdr_quantiles(spark, hdr_partial(cents), list(_HDR_PROBES))
+    return hdr_serve_check(served, cents).localCheckpoint(eager=True)
 
 
 @query(
@@ -3268,121 +2707,34 @@ def agg_hdr_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_hdr_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    w = Window.orderBy("l_extendedprice")
-    ranked = li.select(
+    cents = li.select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
         (F.col("l_orderkey") % 2).alias("half"),
-        (F.row_number().over(w) - 1).cast("long").alias("r0"),
     )
-    lvled = ranked.withColumn(
-        "lvl", F.length(F.conv(F.col("cents").cast("string"), 10, 2)).cast("long")
+    part = hdr_partial(cents, batch_col="half")
+    # THE MERGE (merge_hdr, also inside the serve): counter add + bound
+    # min/max over sketch rows only
+    law = hdr_merge_law(merge_hdr(part), hdr_partial(cents.select("cents")))
+    served = serve_hdr_quantiles(spark, part, list(_HDR_PROBES))
+    out = (
+        hdr_serve_check(served, cents.select("cents"))
+        .crossJoin(F.broadcast(law))
+        .select(
+            "p",
+            "target_rank",
+            "bucket_count",
+            "bucket_lo",
+            "bucket_hi",
+            "est_price",
+            "exact_price",
+            "within_bucket",
+            "width_bound_ok",
+            "n_buckets",
+            "n_mismatch",
+            (F.col("n_mismatch") == 0).alias("merge_exact"),
+        )
     )
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(
-                f"((cents - shiftleft(1L, CAST(lvl - 1 AS INT))) * {HDR_SUB})"
-            )
-            / F.expr("shiftleft(1L, CAST(lvl - 1 AS INT))")
-        ).cast("long"),
-    ).persist()
-    try:
-        part = bucketed.groupBy("half", "lvl", "sub").agg(
-            F.count(F.lit(1)).cast("long").alias("c"),
-            F.min("cents").cast("long").alias("lo"),
-            F.max("cents").cast("long").alias("hi"),
-        )
-        # THE MERGE: counter add + bound min/max over sketch rows only
-        merged = part.groupBy("lvl", "sub").agg(
-            F.sum("c").cast("long").alias("mc"),
-            F.min("lo").cast("long").alias("mlo"),
-            F.max("hi").cast("long").alias("mhi"),
-        )
-        whole = bucketed.groupBy("lvl", "sub").agg(
-            F.count(F.lit(1)).cast("long").alias("wc"),
-            F.min("cents").cast("long").alias("wlo"),
-            F.max("cents").cast("long").alias("whi"),
-        )
-        law = (
-            merged.join(whole, ["lvl", "sub"], "full_outer")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_buckets"),
-                F.sum(
-                    F.when(
-                        ~F.col("mc").eqNullSafe(F.col("wc"))
-                        | ~F.col("mlo").eqNullSafe(F.col("wlo"))
-                        | ~F.col("mhi").eqNullSafe(F.col("whi")),
-                        1,
-                    ).otherwise(0)
-                )
-                .cast("long")
-                .alias("n_mismatch"),
-            )
-        )
-        wo = Window.orderBy("lvl", "sub")
-        cum = merged.withColumn(
-            "cw",
-            F.coalesce(
-                F.sum("mc").over(wo.rowsBetween(Window.unboundedPreceding, -1)),
-                F.lit(0),
-            ).cast("long"),
-        ).withColumn(
-            "mn",
-            F.sum("mc")
-            .over(
-                Window.partitionBy().rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            .cast("long"),
-        )
-        probes = tiny_df(spark, [(p,) for p in _HDR_PROBES], "p double")
-        targets = probes.crossJoin(F.broadcast(cum.select("mn").limit(1))).select(
-            "p", F.floor(F.col("p") * (F.col("mn") - 1)).cast("long").alias("t")
-        )
-        hit = targets.join(
-            F.broadcast(cum),
-            (F.col("t") >= F.col("cw")) & (F.col("t") < F.col("cw") + F.col("mc")),
-        )
-        exact = (
-            targets.withColumnRenamed("t", "r0")
-            .join(bucketed.select("r0", "cents"), "r0")
-            .select("p", F.col("cents").alias("exact_cents"))
-        )
-        est = F.col("mlo") + F.when(
-            F.col("mc") > 1,
-            (F.col("mhi") - F.col("mlo")).cast("double")
-            * (
-                (F.col("t") - F.col("cw")).cast("double")
-                / (F.col("mc") - 1).cast("double")
-            ),
-        ).otherwise(F.lit(0.0))
-        out = (
-            hit.join(exact, "p")
-            .crossJoin(F.broadcast(law))
-            .select(
-                "p",
-                F.col("t").alias("target_rank"),
-                F.col("mc").alias("bucket_count"),
-                F.round(F.col("mlo") / 100.0, 4).alias("bucket_lo"),
-                F.round(F.col("mhi") / 100.0, 4).alias("bucket_hi"),
-                F.round(est / 100.0, 4).alias("est_price"),
-                F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
-                F.col("exact_cents")
-                .between(F.col("mlo"), F.col("mhi"))
-                .alias("within_bucket"),
-                (
-                    (F.col("mhi") - F.col("mlo")).cast("double") / F.col("mlo")
-                    <= 1.0 / HDR_SUB
-                ).alias("width_bound_ok"),
-                "n_buckets",
-                "n_mismatch",
-                (F.col("n_mismatch") == 0).alias("merge_exact"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        bucketed.unpersist()
+    return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -3436,32 +2788,4 @@ def agg_tdigest_sketch_distributed(
     ranked = global_row_number(cents, ["cents"], id_col="rid").select(
         "cents", (F.col("rid") - 1).cast("long").alias("r0")
     )
-    keyed = ranked.select(
-        "cents",
-        "r0",
-        F.when(2 * F.col("r0") < total, 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < total, F.col("r0") + 1)
-        .otherwise(F.lit(total) - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl",
-        (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long"),
-    )
-    p = F.expr("shiftleft(1L, CAST(lvl AS INT))")
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})") / p
-        ).cast("long"),
-    )
-    return bucketed.groupBy("side", "lvl", "sub").agg(
-        F.count(F.lit(1)).cast("long").alias("weight"),
-        F.min("r0").cast("long").alias("min_rank"),
-        F.max("r0").cast("long").alias("max_rank"),
-        F.min("cents").cast("long").alias("lo_cents"),
-        F.max("cents").cast("long").alias("hi_cents"),
-        F.round(
-            F.sum("cents").cast("double") / (100.0 * F.count(F.lit(1))), 6
-        ).alias("mean_price"),
-    )
+    return _td_sketch(_with_td_cell(ranked, F.lit(total)))

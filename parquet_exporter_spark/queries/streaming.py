@@ -16,8 +16,16 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_exporter_spark.queries._util import source_version
+from parquet_exporter_spark.queries._util import (
+    distinct_truth,
+    distinct_verdict,
+    hdr_merge_law,
+    hdr_serve_check,
+    source_version,
+    tdigest_rank_check,
+)
 from parquet_exporter_spark.registry import query
+from parquet_exporter_spark.streaming.cms_ingest import CMS_D, CMS_W
 from parquet_exporter_spark.streaming.hll_ingest import HLL_LC_CUT, HLL_NUM
 from parquet_exporter_spark.tables import read_table, tiny_df
 
@@ -1476,8 +1484,6 @@ def _td_part_centroids_sql(parts: int) -> str:
     ),
 )
 def stream_tdigest_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from parquet_exporter_spark.streaming.tdigest_ingest import (
         TDIGEST,
         serve_tdigest_quantiles,
@@ -1498,53 +1504,17 @@ def stream_tdigest_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     TDIGEST.bootstrap(cents, "cents", _SKETCH_PARTS, store)
     cent = TDIGEST.read(spark, store)
     served = serve_tdigest_quantiles(spark, cent, list(_STD_PROBES))
-    wg = Window.orderBy("cents")
-    gr = cents.select(
-        "cents", (F.row_number().over(wg) - 1).cast("long").alias("r0g")
-    )
-    exact = (
-        served.select("p", F.col("t").alias("r0g"))
-        .join(gr, "r0g")
-        .select("p", F.col("cents").alias("exact_cents"))
-    )
-    ranks = (
-        gr.crossJoin(F.broadcast(served.select("p", "est_cents")))
-        .groupBy("p")
-        .agg(
-            F.sum(F.when(F.col("cents") < F.col("est_cents"), 1).otherwise(0))
-            .cast("long")
-            .alias("lt"),
-            F.sum(F.when(F.col("cents") <= F.col("est_cents"), 1).otherwise(0))
-            .cast("long")
-            .alias("le"),
-        )
-    )
-    rank_err = (
-        F.when(F.col("lt") > F.col("t"), F.col("lt") - F.col("t"))
-        .when(F.col("le") - 1 < F.col("t"), F.col("t") - (F.col("le") - 1))
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    d_tail = (
-        F.when(F.col("t") + 1 < F.col("n") - F.col("t"), F.col("t") + 1)
-        .otherwise(F.col("n") - F.col("t"))
-        .cast("long")
-    )
-    return (
-        served.join(exact, "p")
-        .join(ranks, "p")
-        .select(
-            "p",
-            F.col("t").alias("target_rank"),
-            F.col("weight").alias("merged_weight"),
-            "n_inputs",
-            F.lit(_SKETCH_PARTS).cast("long").alias("n_batches"),
-            F.round(F.col("est_cents") / 100.0, 4).alias("est_price"),
-            F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
-            rank_err.alias("rank_err"),
-            d_tail.alias("d_tail"),
-            (rank_err.cast("double") <= 0.35 * d_tail + 8).alias("within_bound"),
-        )
+    return tdigest_rank_check(served, cents.select("cents")).select(
+        "p",
+        "target_rank",
+        "merged_weight",
+        "n_inputs",
+        F.lit(_SKETCH_PARTS).cast("long").alias("n_batches"),
+        "est_price",
+        "exact_price",
+        "rank_err",
+        "d_tail",
+        "within_bound",
     )
 
 
@@ -1655,11 +1625,8 @@ def stream_hll_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_register_mismatch")
         )
     )
-    truth = li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("true_distinct")
-    )
     return (
-        served.crossJoin(F.broadcast(truth))
+        served.crossJoin(F.broadcast(distinct_truth(li, "l_partkey")))
         .crossJoin(F.broadcast(law))
         .select(
             "m",
@@ -1669,21 +1636,7 @@ def stream_hll_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_scaled",
             "est_distinct",
             "true_distinct",
-            F.round(
-                F.abs(
-                    F.col("est_distinct").cast("double")
-                    - F.col("true_distinct")
-                )
-                / F.col("true_distinct"),
-                6,
-            ).alias("rel_error"),
-            (
-                F.abs(
-                    F.col("est_distinct").cast("double")
-                    - F.col("true_distinct")
-                )
-                <= 0.15 * F.col("true_distinct") + 1
-            ).alias("within_bound"),
+            *distinct_verdict(0.15),
             "n_register_mismatch",
             (F.col("n_register_mismatch") == 0).alias("merge_exact"),
         )
@@ -1792,8 +1745,6 @@ _SHDR_PROBES = (0.5, 0.99)
     ),
 )
 def stream_hdr_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from parquet_exporter_spark.streaming.hdr_ingest import (
         HDR,
         hdr_partial,
@@ -1810,57 +1761,21 @@ def stream_hdr_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     HDR.bootstrap(cents, "cents", _SKETCH_PARTS, store)  # see stream_tdigest_twin
     buckets = HDR.read(spark, store)
     served = serve_hdr_quantiles(spark, buckets, list(_SHDR_PROBES))
-    whole = (
-        hdr_partial(cents.select("cents"))
-        .withColumnRenamed("c", "wc")
-        .withColumnRenamed("lo", "wlo")
-        .withColumnRenamed("hi", "whi")
-    )
-    law = (
-        merge_hdr(buckets)
-        .join(whole, ["lvl", "sub"], "full_outer")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_buckets"),
-            F.sum(
-                F.when(
-                    ~F.col("c").eqNullSafe(F.col("wc"))
-                    | ~F.col("lo").eqNullSafe(F.col("wlo"))
-                    | ~F.col("hi").eqNullSafe(F.col("whi")),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_mismatch"),
-        )
-    )
-    wg = Window.orderBy("cents")
-    gr = cents.select(
-        "cents", (F.row_number().over(wg) - 1).cast("long").alias("r0")
-    )
-    exact = (
-        served.select("p", F.col("t").alias("r0"))
-        .join(gr, "r0")
-        .select("p", F.col("cents").alias("exact_cents"))
-    )
+    law = hdr_merge_law(merge_hdr(buckets), hdr_partial(cents.select("cents")))
     return (
-        served.join(exact, "p")
+        hdr_serve_check(served, cents.select("cents"))
         .crossJoin(F.broadcast(law))
         .select(
             "p",
-            F.col("t").alias("target_rank"),
-            F.col("c").alias("bucket_count"),
+            "target_rank",
+            "bucket_count",
             F.lit(_SKETCH_PARTS).cast("long").alias("n_batches"),
-            F.round(F.col("lo") / 100.0, 4).alias("bucket_lo"),
-            F.round(F.col("hi") / 100.0, 4).alias("bucket_hi"),
-            F.round(F.col("est_cents") / 100.0, 4).alias("est_price"),
-            F.round(F.col("exact_cents") / 100.0, 4).alias("exact_price"),
-            F.col("exact_cents")
-            .between(F.col("lo"), F.col("hi"))
-            .alias("within_bucket"),
-            (
-                (F.col("hi") - F.col("lo")).cast("double") / F.col("lo")
-                <= 0.125
-            ).alias("width_bound_ok"),
+            "bucket_lo",
+            "bucket_hi",
+            "est_price",
+            "exact_price",
+            "within_bucket",
+            "width_bound_ok",
             "n_buckets",
             "n_mismatch",
             (F.col("n_mismatch") == 0).alias("merge_exact"),
@@ -1881,7 +1796,7 @@ _SCMS_PROBES = (1, 2, 7, 13)
 def _scms_oracle() -> str:
     from parquet_exporter_spark.functions import dedup as _D
 
-    coeffs = _D.hash_coefficients(4)
+    coeffs = _D.hash_coefficients(CMS_D)
     seeds = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(coeffs))
     bh = _D.sql_base_hash_31("CAST(o_custkey AS VARCHAR)")
     bhp = _D.sql_base_hash_31("CAST(p.key AS VARCHAR)")
@@ -1892,7 +1807,7 @@ def _scms_oracle() -> str:
         FROM orders),
     buck AS MATERIALIZED (
         SELECT batch_id, seed AS depth,
-               ((a * h + b) % {_D.MERSENNE_31}) % 64 AS bucket
+               ((a * h + b) % {_D.MERSENNE_31}) % {CMS_W} AS bucket
         FROM h CROSS JOIN (VALUES {seeds}) AS t(seed, a, b)),
     part AS MATERIALIZED (
         SELECT batch_id, depth, bucket, CAST(count(*) AS BIGINT) AS c
@@ -1911,7 +1826,7 @@ def _scms_oracle() -> str:
     pk AS (SELECT * FROM (VALUES {probes}) AS t(key)),
     pb AS (
         SELECT p.key, t.seed AS depth,
-               ((t.a * {bhp} + t.b) % {_D.MERSENNE_31}) % 64 AS bucket
+               ((t.a * {bhp} + t.b) % {_D.MERSENNE_31}) % {CMS_W} AS bucket
         FROM pk p CROSS JOIN (VALUES {seeds}) AS t(seed, a, b)),
     est AS (
         SELECT pb.key,
@@ -2092,6 +2007,7 @@ def stream_cms_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_kmv_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet_exporter_spark.streaming.kmv_ingest import (
         KMV,
+        kmv_estimate,
         kmv_partial,
         serve_kmv_estimate,
     )
@@ -2102,25 +2018,12 @@ def stream_kmv_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey", (F.col("l_orderkey") % _SKETCH_PARTS).alias("batch")
     )
     KMV.bootstrap(keyed, "l_partkey", _SKETCH_PARTS, store)  # see stream_tdigest_twin
-    hashes = KMV.read(spark, store)
-    served = serve_kmv_estimate(spark, hashes)
+    served = serve_kmv_estimate(spark, KMV.read(spark, store))
     # whole-stream bottom-k, built single-pass for the law check
-    from pyspark.sql import Window
-
-    whole = kmv_partial(keyed.select("l_partkey"), "l_partkey")
-    wk = whole.withColumn(
-        "rk", F.row_number().over(Window.orderBy("hv")).cast("long")
-    ).agg(
-        F.max(F.when(F.col("rk") == 128, F.col("hv")))
-        .cast("long")
-        .alias("kth_whole")
-    )
-    truth = li.agg(
-        F.countDistinct("l_partkey").cast("long").alias("true_distinct")
-    )
+    whole = kmv_estimate(kmv_partial(keyed.select("l_partkey"), "l_partkey"))
     return (
-        served.crossJoin(F.broadcast(wk))
-        .crossJoin(F.broadcast(truth))
+        served.crossJoin(F.broadcast(whole.select(F.col("kth").alias("kth_whole"))))
+        .crossJoin(F.broadcast(distinct_truth(li, "l_partkey")))
         .select(
             "k",
             F.lit(_SKETCH_PARTS).cast("long").alias("n_batches"),
@@ -2130,20 +2033,6 @@ def stream_kmv_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("kth").eqNullSafe(F.col("kth_whole")).alias("merge_exact"),
             "est_distinct",
             "true_distinct",
-            F.round(
-                F.abs(
-                    F.col("est_distinct").cast("double")
-                    - F.col("true_distinct")
-                )
-                / F.col("true_distinct"),
-                6,
-            ).alias("rel_error"),
-            (
-                F.abs(
-                    F.col("est_distinct").cast("double")
-                    - F.col("true_distinct")
-                )
-                <= 0.35 * F.col("true_distinct") + 1
-            ).alias("within_bound"),
+            *distinct_verdict(0.35),
         )
     )

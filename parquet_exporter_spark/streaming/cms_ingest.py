@@ -13,10 +13,13 @@ estimates for a literal probe-key set with the one-sided CMS guarantee
 emitted as data: est >= true count ALWAYS (counters only ever add),
 with the measured overcount alongside.
 
-Hash family is agg_count_min_portable's (queries/aggregates.py): a
-31-bit md5-prefix base hash fed through d=4 pairwise-independent
-(a*h + b) mod p mod w maps with LCG-derived literal coefficients —
-identical in both engines, no engine-private binary.
+Hash family (``cms_cells``): a 31-bit md5-prefix base hash fed through
+d=4 pairwise-independent (a*h + b) mod p mod w maps with LCG-derived
+literal coefficients — identical in both engines, no engine-private
+binary. This module owns the engine's count-min sketch: the batch
+queries in queries/aggregates.py (agg_count_min_portable,
+agg_cms_merge) and the ``stream_cms_twin`` oracle take their cells,
+counters and parameters from it.
 
 Store protocol: ``partial_store.MergeableSketch`` (the ``CMS`` spec
 below: partial ``cms_partial``, fold ``merge_cms``). Per-batch state is
@@ -46,6 +49,7 @@ __all__ = [
     "CMS",
     "CMS_D",
     "CMS_W",
+    "cms_cells",
     "cms_partial",
     "cms_apply_batch",
     "committed_batches",
@@ -55,12 +59,11 @@ __all__ = [
     "compact_cms_store",
 ]
 
-# shared with the portable batch sketches (queries/aggregates.py)
 CMS_D = 4  # depth (hash functions)
 CMS_W = 64  # width (buckets per depth)
 
 
-def _bucket_rows(
+def cms_cells(
     df: DataFrame, key_col: str, batch_col: str | None = None
 ) -> DataFrame:
     """The (depth, bucket) cell of each row's key at every depth, with
@@ -104,7 +107,7 @@ def cms_partial(
     additionally by the batch — per-batch rows identical (pure counting
     per (batch, cell))."""
     keys = ([batch_col] if batch_col else []) + ["depth", "bucket"]
-    return _bucket_rows(batch_df, key_col, batch_col).groupBy(*keys).agg(
+    return cms_cells(batch_df, key_col, batch_col).groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
 
@@ -138,7 +141,7 @@ def serve_cms_estimates(spark, counters: DataFrame, probe_keys: list) -> DataFra
     # near-empty tasks per downstream operator
     probes = tiny_df(spark, [(str(k),) for k in probe_keys], "key string")
     # the probe's (depth, bucket) cells, keeping the key alongside
-    pb = _bucket_rows(probes, "key", batch_col="key")
+    pb = cms_cells(probes, "key", batch_col="key")
     return (
         pb.join(merged, ["depth", "bucket"], "left")
         .groupBy("key")

@@ -13,11 +13,13 @@ registered ``stream_hdr_twin`` hash-checks that identity bucket by
 bucket (FULL OUTER mismatch count provably 0) and serves quantiles off
 the merged sketch with the structural 12.5% relative-width ceiling.
 
-Construction is agg_hdr_histogram's (queries/aggregates.py): integer
-cents -> (bit-length octave, one of 8 linear subbuckets) — exact
-integer arithmetic only, no libm in any decision, one map-side-
-combinable aggregate per batch. Per-batch state is O(octaves * 8)
-counter rows; the store compacts losslessly.
+Construction (``hdr_partial``): integer cents -> (bit-length octave,
+one of 8 linear subbuckets) — exact integer arithmetic only, no libm in
+any decision, one map-side-combinable aggregate per batch. Per-batch
+state is O(octaves * 8) counter rows; the store compacts losslessly.
+This module owns the engine's HDR histogram: the batch queries in
+queries/aggregates.py (agg_hdr_histogram, agg_hdr_merge) build, merge
+and serve through it.
 
 Store protocol: ``partial_store.MergeableSketch`` (the ``HDR`` spec
 below: partial ``hdr_partial``, fold ``merge_hdr``).
@@ -52,8 +54,7 @@ __all__ = [
     "compact_hdr_store",
 ]
 
-# shared with the portable batch sketches (queries/aggregates.py): 8
-# linear subbuckets per bit-length octave -> relative bucket width <= 1/8.
+# 8 linear subbuckets per bit-length octave -> relative bucket width <= 1/8
 HDR_SUB = 8
 
 

@@ -12,12 +12,15 @@ hash-checked by the registered ``stream_hll_twin`` (register mismatch
 count vs the whole-corpus sketch is provably 0) and re-pinned across a
 real readStream trigger boundary in tests/test_streaming.py.
 
-Construction is agg_hll_portable's (queries/aggregates.py): a 60-bit
+Construction (``hll_partial``, ``serve_hll_estimate``): a 60-bit
 md5-prefix hash splits into a 9-bit register index and 51-bit
 remainder whose leading-zero count is rho (bit-length via base-2
 rendering — exact integers, no libm in any decision); the estimator
 keeps the indicator sum exact by integer scaling (s_scaled = sum
-2^(52-rho) + V*2^52) and applies the published linear-counting branch.
+2^(52-rho) + V*2^52) and applies the published linear-counting
+branch. This module owns the engine's portable HLL: the batch queries
+in queries/aggregates.py (agg_hll_portable, agg_hll_union) build,
+merge and estimate through it.
 
 Store protocol: ``partial_store.MergeableSketch`` (the ``HLL`` spec
 below: partial ``hll_partial``, fold ``merge_hll``). Per-batch state is
@@ -56,7 +59,6 @@ __all__ = [
     "compact_hll_store",
 ]
 
-# Shared with the portable batch sketches (queries/aggregates.py):
 # 60-bit hash = 9-bit register index + 51-bit remainder; rho in [1, 52].
 HLL_HEX = 15  # md5 hex prefix chars -> 60-bit BIGINT-exact hash
 HLL_REM = 51  # low-order hash bits that feed rho
@@ -125,9 +127,9 @@ compact_hll_store = HLL.compact
 
 def serve_hll_estimate(spark, regs: DataFrame) -> DataFrame:
     """The merged global state and estimate as ONE row: (m, n_nonempty,
-    v_empty, s_scaled, est_distinct) — agg_hll_portable's exact-integer
-    estimator (one IEEE divide of exact operands; linear-counting
-    branch below the published cutoff)."""
+    v_empty, s_scaled, est_distinct) — the exact-integer estimator (one
+    IEEE divide of exact operands; linear-counting branch below the
+    published cutoff)."""
     merged = merge_hll(regs)
     state = merged.agg(
         F.count(F.lit(1)).cast("long").alias("n_nonempty"),

@@ -3,18 +3,20 @@ of the foreachBatch sketch family — the distinct-count sketch that,
 unlike HLL, keeps actual sample hashes, so any two maintained stores
 are one more merge away from a Jaccard estimate.
 
-The KMV merge law is the bottom-k invariant agg_kmv_union executed:
-every hash in the global bottom-k is in its own batch's bottom-k, so
-union + re-truncate is grouping-invariant — any fold order (including
-compaction) yields the identical k-row state, whose k-th minimum
-PROVABLY equals the single-pass whole-stream k-th minimum. The
-registered ``stream_kmv_twin`` hash-checks that law (NULL-safe for
-under-k streams) and serves the (k-1)/U_(k) distinct estimate with
-truth and error verdict.
+The KMV merge law is the bottom-k invariant: every hash in the global
+bottom-k is in its own batch's bottom-k, so union + re-truncate is
+grouping-invariant — any fold order (including compaction) yields the
+identical k-row state, whose k-th minimum PROVABLY equals the
+single-pass whole-stream k-th minimum. The registered
+``stream_kmv_twin`` hash-checks that law (NULL-safe for under-k
+streams) and serves the (k-1)/U_(k) distinct estimate with truth and
+error verdict.
 
 Hashes are the portable 60-bit md5-prefix family (exact in BIGINT on
 both engines); the per-batch bottom-k is TakeOrderedAndProject —
-per-partition top-k, no global sort (the agg_kmv_distinct shape).
+per-partition top-k, no global sort. This module owns the engine's
+KMV sketch: the batch queries in queries/aggregates.py (agg_kmv_*)
+build, merge, estimate and take Jaccard through it.
 
 Store protocol: ``partial_store.MergeableSketch`` (the ``KMV`` spec
 below: partial ``kmv_partial``, fold ``merge_kmv``). Per-batch state is
@@ -49,12 +51,13 @@ __all__ = [
     "committed_batches",
     "read_kmv_hashes",
     "merge_kmv",
+    "kmv_estimate",
     "serve_kmv_estimate",
     "compact_kmv_store",
+    "kmv_jaccard",
     "kmv_jaccard_stores",
 ]
 
-# shared with the portable batch sketches (queries/aggregates.py)
 KMV_K = 128
 KMV_HEX = 15  # 60-bit hashes: exact in BIGINT on both engines
 KMV_SPACE = float(1 << 60)
@@ -108,22 +111,15 @@ read_kmv_hashes = KMV.read
 compact_kmv_store = KMV.compact
 
 
-def serve_kmv_estimate(spark, hashes: DataFrame) -> DataFrame:
-    """The merged state and distinct estimate as ONE row: (k, n_kept,
-    kth, est_distinct) — est = (k-1) * SPACE / U_(k), or n_kept exactly
-    when the stream held fewer than k distinct hashes."""
-    merged = merge_kmv(hashes)
-    from pyspark.sql import Window
-
-    ranked = merged.withColumn(
-        "rk", F.row_number().over(Window.orderBy("hv")).cast("long")
-    )
-    state = ranked.agg(
+def kmv_estimate(bottom_k: DataFrame) -> DataFrame:
+    """The distinct estimate off one bottom-k hash set as ONE row: (k,
+    n_kept, kth, est_distinct) — est = (k-1) * SPACE / U_(k), or n_kept
+    exactly when fewer than k hashes were kept. U_(k) is max(hv) of a
+    full bottom-k, so no ranking window is needed."""
+    state = bottom_k.agg(
         F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.max(F.when(F.col("rk") == KMV_K, F.col("hv")))
-        .cast("long")
-        .alias("kth"),
-    )
+        F.max("hv").cast("long").alias("mx"),
+    ).select("n_kept", F.when(F.col("n_kept") == KMV_K, F.col("mx")).alias("kth"))
     est = (
         F.when(F.col("kth").isNull(), F.col("n_kept"))
         .otherwise(
@@ -141,24 +137,23 @@ def serve_kmv_estimate(spark, hashes: DataFrame) -> DataFrame:
     )
 
 
-def kmv_jaccard_stores(spark, store_a: str, store_b: str) -> DataFrame:
-    """Streaming Jaccard between two maintained KMV stores — the 'one
-    more merge away' the module docstring promises, executed: U =
-    bottom-k of (merged A  union  merged B), estimate = |U n sketch_A n
-    sketch_B| / |U|.
+def serve_kmv_estimate(spark, hashes: DataFrame) -> DataFrame:
+    """The merged state and distinct estimate as ONE row (``kmv_estimate``
+    of ``merge_kmv``)."""
+    return kmv_estimate(merge_kmv(hashes))
+
+
+def kmv_jaccard(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Jaccard between two bottom-k hash sets: U = bottom-k of (A union
+    B), estimate = |U n sketch_A n sketch_B| / |U|.
 
     The sketch-only membership test is EXACT for U's elements, not an
     approximation: U equals the true bottom-k of A u B (bottom-k
     invariant), and any h in U that belongs to A satisfies h <=
     kth(A u B) <= kth(A), so h is necessarily inside A's kept bottom-k
     — membership in the sketch coincides with membership in the set.
-    The estimator therefore equals the full-set-marked estimator the
-    batch query (agg_kmv_jaccard) computes, which the suite pins by
-    direct equality. Returns ONE row (k, n_union_sample, n_both,
-    est_jaccard)."""
-    a = merge_kmv(read_kmv_hashes(spark, store_a))
-    b = merge_kmv(read_kmv_hashes(spark, store_b))
-    u = a.union(b).distinct().orderBy("hv").limit(KMV_K)
+    Returns ONE row (k, n_union_sample, n_both, est_jaccard)."""
+    u = merge_kmv(a.union(b))
     marked = (
         u.join(F.broadcast(a.withColumn("in_a", F.lit(1))), "hv", "left")
         .join(F.broadcast(b.withColumn("in_b", F.lit(1))), "hv", "left")
@@ -175,4 +170,14 @@ def kmv_jaccard_stores(spark, store_a: str, store_b: str) -> DataFrame:
         F.round(
             F.sum("both").cast("double") / F.count(F.lit(1)), 6
         ).alias("est_jaccard"),
+    )
+
+
+def kmv_jaccard_stores(spark, store_a: str, store_b: str) -> DataFrame:
+    """Streaming Jaccard between two maintained KMV stores — the 'one
+    more merge away' the module docstring promises: ``kmv_jaccard`` of
+    the two merged states."""
+    return kmv_jaccard(
+        merge_kmv(read_kmv_hashes(spark, store_a)),
+        merge_kmv(read_kmv_hashes(spark, store_b)),
     )

@@ -1,20 +1,20 @@
 """Streaming t-digest maintenance: a ``foreachBatch`` handler that
 commits one immutable PARTIAL digest per micro-batch and serves global
-quantiles off the merged centroid store — the round-13 verdict's
-'streaming sketch maintenance' item, wiring the merge law
-``agg_tdigest_merged`` proved into the monitor shape the streaming
-modules share.
+quantiles off the merged centroid store. This module owns the
+engine's t-digest: the batch queries in queries/aggregates.py
+(agg_tdigest_*) build, merge and serve through it, taking their cells
+from ``tdigest_cell`` where they also carry per-row exact ranks.
 
 Per micro-batch:
 
-- ``tdigest_partial`` builds the batch's dyadic t-digest (the exact
-  construction of agg_tdigest_sketch, queries/aggregates.py: rank ->
-  tail distance -> bit-length level -> 4-way sub-split; exact integer
-  arithmetic throughout) — O(log batch) centroid rows.
+- ``tdigest_partial`` builds the batch's dyadic t-digest (rank ->
+  ``tdigest_cell``: tail distance -> bit-length level -> 4-way
+  sub-split; exact integer arithmetic throughout) — O(log batch)
+  centroid rows.
 - ``tdigest_apply_batch`` commits the centroids APPEND-ONLY through
   ``partial_store.MergeableSketch`` (the ``TDIGEST`` spec below).
 - ``serve_tdigest_quantiles`` merges ALL committed partials without
-  touching data rows — the agg_tdigest_merged re-bin: centroids sorted
+  touching data rows — the ``merge_tdigest`` re-bin: centroids sorted
   by value bounds, cumulative weight assigns each centroid's midpoint
   rank to a merged dyadic cell, probes interpolate inside the containing
   bucket's exact cents bounds.
@@ -44,7 +44,7 @@ export); this extends the engine per SURVEY.md section 2.2.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from parquet_exporter_spark.streaming.partial_store import (
@@ -55,6 +55,7 @@ from parquet_exporter_spark.streaming.partial_store import (
 __all__ = [
     "TDIGEST",
     "TD_SUB",
+    "tdigest_cell",
     "tdigest_partial",
     "tdigest_apply_batch",
     "committed_batches",
@@ -64,9 +65,23 @@ __all__ = [
     "compact_tdigest_store",
 ]
 
-# dyadic sub-buckets per level (rank error <= d/4 at tail distance d),
-# shared with the batch sketches (queries/aggregates.py)
+# dyadic sub-buckets per level (rank error <= d/4 at tail distance d)
 TD_SUB = 4
+
+
+def tdigest_cell(r0: Column, n: Column) -> tuple[Column, Column, Column]:
+    """The dyadic cell ``(side, lvl, sub)`` of 0-based rank ``r0`` among
+    ``n`` values: the nearer tail (side), the rank's distance dd to it,
+    dd's bit-length level and a TD_SUB-way split of that level. Exact
+    integer arithmetic throughout (bit length via base-2 rendering, 2^lvl
+    via shift), so the cell hash-matches the oracle SQL. Every t-digest
+    build and re-bin in the engine takes its cell from here."""
+    lower = 2 * r0 < n
+    dd = F.when(lower, r0 + 1).otherwise(n - r0)
+    lvl = (F.length(F.conv(dd.cast("string"), 10, 2)) - 1).cast("long")
+    p2 = F.call_function("shiftleft", F.lit(1).cast("long"), lvl.cast("int"))
+    sub = F.floor((dd - p2) * TD_SUB / p2).cast("long")
+    return F.when(lower, 0).otherwise(1), lvl, sub
 
 
 def tdigest_partial(
@@ -101,24 +116,9 @@ def tdigest_partial(
         (F.row_number().over(wo) - 1).cast("long").alias("r0"),
         F.count(F.lit(1)).over(wc).cast("long").alias("nb"),
     )
-    keyed = ranked.select(
-        *keep,
-        "cents",
-        F.when(2 * F.col("r0") < F.col("nb"), 0).otherwise(1).alias("side"),
-        F.when(2 * F.col("r0") < F.col("nb"), F.col("r0") + 1)
-        .otherwise(F.col("nb") - F.col("r0"))
-        .alias("dd"),
-    )
-    lvled = keyed.withColumn(
-        "lvl",
-        (F.length(F.conv(F.col("dd").cast("string"), 10, 2)) - 1).cast("long"),
-    )
-    p2 = F.expr("shiftleft(1L, CAST(lvl AS INT))")
-    bucketed = lvled.withColumn(
-        "sub",
-        F.floor(
-            F.expr(f"((dd - shiftleft(1L, CAST(lvl AS INT))) * {TD_SUB})") / p2
-        ).cast("long"),
+    side, lvl, sub = tdigest_cell(F.col("r0"), F.col("nb"))
+    bucketed = ranked.select(
+        *keep, "cents", side.alias("side"), lvl.alias("lvl"), sub.alias("sub")
     )
     keys = ([batch_col] if batch_col else []) + ["side", "lvl", "sub"]
     return bucketed.groupBy(*keys).agg(
@@ -130,7 +130,7 @@ def tdigest_partial(
 
 
 def merge_tdigest(cent: DataFrame) -> DataFrame:
-    """The agg_tdigest_merged re-bin over a tagged centroid table:
+    """The t-digest merge: a re-bin over a tagged centroid table —
     sort by (lo, hi, batch_id, side, lvl, sub), cumulative weight,
     midpoint rank -> merged dyadic cell. Output one row per merged
     bucket with exact cents bounds and the disjoint cum-weight span
@@ -155,23 +155,9 @@ def merge_tdigest(cent: DataFrame) -> DataFrame:
         .cast("long"),
     )
     rekeyed = ordered.withColumn("mid", F.col("cw") + F.expr("(w - 1) div 2"))
-    resided = rekeyed.select(
-        "*",
-        F.when(2 * F.col("mid") < F.col("n"), 0).otherwise(1).alias("side2"),
-        F.when(2 * F.col("mid") < F.col("n"), F.col("mid") + 1)
-        .otherwise(F.col("n") - F.col("mid"))
-        .alias("dd2"),
-    )
-    relvled = resided.withColumn(
-        "lvl2",
-        (F.length(F.conv(F.col("dd2").cast("string"), 10, 2)) - 1).cast("long"),
-    )
-    q2 = F.expr("shiftleft(1L, CAST(lvl2 AS INT))")
-    mbucket = relvled.withColumn(
-        "sub2",
-        F.floor(
-            F.expr(f"((dd2 - shiftleft(1L, CAST(lvl2 AS INT))) * {TD_SUB})") / q2
-        ).cast("long"),
+    side2, lvl2, sub2 = tdigest_cell(F.col("mid"), F.col("n"))
+    mbucket = rekeyed.select(
+        "*", side2.alias("side2"), lvl2.alias("lvl2"), sub2.alias("sub2")
     )
     return mbucket.groupBy("side2", "lvl2", "sub2").agg(
         F.sum("w").cast("long").alias("weight"),

@@ -680,28 +680,67 @@ def _is_allowed(flag: str, allowed: set[str]) -> bool:
     return False
 
 
+def _unapproved_flags(spark, sf_dir: str, name: str) -> list[str]:
+    """The red flags of ``name``'s cold plan that its ALLOWED entry does
+    not waive."""
+    df = REGISTRY[name].raw_fn(spark, sf_dir)
+    # Audit COLD plans: when a query (this one or an earlier test's)
+    # persists an intermediate, CacheManager substitutes
+    # InMemoryRelation into the plan, and the relation's toString
+    # re-prints its cached subplan — inflating exchange counts with
+    # duplicates of already-counted nodes. Clearing AFTER the build
+    # but BEFORE reading the plan un-registers any persist the build
+    # itself made (executedPlan resolves lazily on access).
+    spark.catalog.clearCache()
+    flags = _flags(df._jdf.queryExecution().executedPlan().toString())
+    allowed = ALLOWED.get(name, (set(), ""))[0]
+    return sorted(f for f in flags if not _is_allowed(f, allowed))
+
+
 @pytest.mark.slow  # fleet-wide plan sweep (~3 min); runs in the round-close gate (tools/roundcheck.sh)
 def test_no_unapproved_scale_red_flags(spark, sf_dir):
     offenders = {}
-    for name, qd in REGISTRY.items():
-        df = qd.raw_fn(spark, sf_dir)
-        # Audit COLD plans: when a query (this one or an earlier test's)
-        # persists an intermediate, CacheManager substitutes
-        # InMemoryRelation into the plan, and the relation's toString
-        # re-prints its cached subplan — inflating exchange counts with
-        # duplicates of already-counted nodes. Clearing AFTER the build
-        # but BEFORE reading the plan un-registers any persist the build
-        # itself made (executedPlan resolves lazily on access).
-        spark.catalog.clearCache()
-        flags = _flags(df._jdf.queryExecution().executedPlan().toString())
-        allowed = ALLOWED.get(name, (set(), ""))[0]
-        extra = {f for f in flags if not _is_allowed(f, allowed)}
+    for name in REGISTRY:
+        extra = _unapproved_flags(spark, sf_dir, name)
         if extra:
-            offenders[name] = sorted(extra)
+            offenders[name] = extra
     assert not offenders, (
         "scale red flags outside the allowlist (add with a justification "
         f"only if genuinely bounded): {offenders}"
     )
+
+
+# The batch sketch queries build through the streaming sketch modules
+# (streaming/*_ingest.py) as the stream twins do; the default run checks
+# their plans, which the slow sweep above otherwise covers only at round
+# close.
+SKETCH_QUERIES = [
+    "agg_count_min_portable",
+    "agg_cms_merge",
+    "agg_hll_portable",
+    "agg_hll_union",
+    "agg_kmv_distinct",
+    "agg_kmv_union",
+    "agg_kmv_jaccard",
+    "agg_hdr_histogram",
+    "agg_hdr_merge",
+    "agg_tdigest_sketch",
+    "agg_tdigest_sketch_distributed",
+    "agg_tdigest_quantiles",
+    "agg_tdigest_grouped",
+    "agg_tdigest_cdf",
+    "agg_tdigest_merged",
+    "stream_cms_twin",
+    "stream_hll_twin",
+    "stream_kmv_twin",
+    "stream_hdr_twin",
+    "stream_tdigest_twin",
+]
+
+
+@pytest.mark.parametrize("name", SKETCH_QUERIES)
+def test_sketch_plans_within_allowlist(spark, sf_dir, name):
+    assert _unapproved_flags(spark, sf_dir, name) == []
 
 
 @pytest.mark.slow  # fleet-wide plan sweep (~3 min); runs in the round-close gate (tools/roundcheck.sh)

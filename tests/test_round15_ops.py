@@ -195,3 +195,24 @@ def test_pq_expr_literals_round_trip_exactly(spark):
     assert list(row["d"]) == list(row["r"])
     # distance to the first centroid (identical values) must be exactly 0
     assert row["d"][0] == 0.0
+
+
+def test_non_finite_double_literals_build_and_evaluate(spark):
+    """NaN and +/-Inf have no decimal spelling: a PQ codebook and an LSH
+    plane holding them must still build a plan and evaluate (the literal
+    is a string cast), and lsh_bucket refuses a Column for ``vec``."""
+    import math
+
+    from parquet_exporter_spark.functions.similarity import lsh_bucket
+    from parquet_exporter_spark.operators.pq import _dists
+
+    bad = [float("nan"), float("inf"), float("-inf")]
+    df = spark.range(1).select(F.array(*[F.lit(1.0)] * 3).alias("s0"))
+    d = df.select(_dists("s0", [bad, [1.0, 1.0, 1.0]]).alias("d")).first()["d"]
+    assert math.isnan(d[0]) and d[1] == 0.0
+    planes = [bad, [1.0, -1.0, 0.0]]
+    # the NaN dot sets bit 0 (Spark orders NaN above every number, so
+    # NaN >= 0 holds); the second dot is exactly 0, which sets bit 1
+    assert df.select(lsh_bucket("s0", planes).alias("b")).first()["b"] == 3
+    with pytest.raises(TypeError, match="vec"):
+        lsh_bucket(F.col("s0"), planes)
